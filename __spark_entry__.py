@@ -121,7 +121,7 @@ def q_perplexity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bc = spark.sparkContext.broadcast(_corpus_model(spark, sf_dir))
     docs = _docs(spark, sf_dir)
-    udf = make_score_udf(bc, bos=True, eos=True)
+    udf = make_score_udf(bc)
     return docs.select("doc_id", udf(F.col("text")).alias("lm")).select(
         "doc_id",
         # widen f32 -> f64 exactly BEFORE rounding so both engines round the
@@ -154,7 +154,7 @@ def q_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).withColumnRenamed("lang", "lang_pred")
     docs = docs.withColumn("text_scrubbed", scrub_text(F.col("text")))
     docs = ts.quality_features(docs, "text_scrubbed")
-    udf = make_score_udf(bc, bos=True, eos=True)
+    udf = make_score_udf(bc)
     docs = docs.withColumn("lm", udf(F.col("text_scrubbed"))).select(
         "*", "lm.log10_prob", "lm.tokens", "lm.oov", "lm.ppl"
     ).drop("lm")

@@ -244,7 +244,8 @@ def _discount_and_vocab_stats(
     for r in rows:
         if r["cbin"] is not None:
             njs[r["n"]][int(r["cbin"])] += r["freq"]
-        if r["n"] == 1 and not r["bos"]:
+        # bos is NULL for a NULL first token: not a vocab type
+        if r["n"] == 1 and r["bos"] is False:
             vocab_rows += r["freq"]
     return _discounts_from_njs(njs, order), vocab_rows
 

@@ -115,7 +115,7 @@ def paragraph_filter(
     from ..spark.scoring import make_score_udf
 
     paras = split_paragraphs(df, id_col, text_col, sep)
-    udf = make_score_udf(bc_model, bos=True, eos=True)
+    udf = make_score_udf(bc_model)
     scored = paras.withColumn("lm", udf(F.col("para"))).select(
         "doc_id", "para_idx", "para",
         F.col("lm.ppl").alias("ppl"),

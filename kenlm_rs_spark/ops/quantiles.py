@@ -1,7 +1,8 @@
 """Mergeable fixed-width-histogram quantiles — the scale path for fitting
 the per-language perplexity tertiles that drive the CCNet head/middle/tail
-keep/drop decision (pipeline/quality.py, streaming/filter_stream.py's
-pre-fitted thresholds).
+keep/drop decision (pipeline/quality.py, and the pre-fitted thresholds of
+streaming/stream_filter.py's filter_transform, pinned stream == batch by
+tests/test_sources_streaming.py::test_streaming_filter_available_now).
 
 An exact per-group percentile at 10^12 documents is a per-group sort;
 Spark's approx_percentile is a KLL sketch whose internals no oracle can

@@ -119,8 +119,8 @@ def remove_duplicated_spans(
     Output: (doc_id, cleaned_text, n_tokens, n_removed). cleaned_text is
     the kept tokens re-joined with single spaces (token-stream semantics —
     original inter-token whitespace is not preserved); '' when everything
-    was duplicated, and for docs shorter than L tokens the text is just
-    re-joined unchanged.
+    was duplicated or the text is NULL, and for docs shorter than L tokens
+    the text is just re-joined unchanged.
 
     Scale shape (r7 second pass, guide §2.3): one uniform-key groupBy on
     the span (hashed=True makes it an 8-byte xxhash64 key at 10^12 docs),
@@ -178,7 +178,10 @@ def remove_duplicated_spans(
         .join(removed, "doc_id", "left")
         .select(
             "doc_id",
-            F.array_join(F.filter(toks, _kept), " ").alias("cleaned_text"),
+            # NULL text -> '' (array_join over a NULL token array is NULL)
+            F.coalesce(
+                F.array_join(F.filter(toks, _kept), " "), F.lit("")
+            ).alias("cleaned_text"),
             F.size(toks).cast("long").alias("n_tokens"),
             # explicit null branch: size(NULL) is -1/NULL depending on the
             # session's ANSI setting — never let that leak into the count

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..lm.model import NGramModel
 from ..ops.urls import canonical_url, registered_domain
-from ..spark.scoring import make_langid_score_udf
+from ..spark.scoring import with_langid_scores
 from .extract import EXTRACTOR_VERSION, with_extracted_text
 from .langid import default_langid
 from .quality import RULES_VERSION, decide, ppl_thresholds, rule_columns, with_buckets
@@ -69,8 +69,6 @@ def load_language_models(spark: SparkSession, lm_dir: str) -> dict:
     if not bcs:
         raise ValueError(f"no .arpa/.bin models in {lm_dir}")
     return bcs
-
-
 
 
 def run_filter_job(
@@ -154,14 +152,7 @@ def run_filter_job(
         # scores (text_scrubbed) — scrub placeholders are OOV, so an
         # unscrubbed threshold distribution would bias the buckets
         sample = sample.withColumn("text_scrubbed", scrub_text(F.col("text")))
-        fused = make_langid_score_udf(bc_langid, bc_models)
-        sample = sample.withColumn(
-            "ls", fused(F.col("text"), F.col("text_scrubbed"))
-        ).select(
-            "*",
-            F.col("ls.lang").alias("lang_pred"),
-            F.col("ls.ppl").alias("ppl"),
-        )
+        sample = with_langid_scores(sample, bc_langid, bc_models)
         thresholds = ppl_thresholds(
             sample, lang_col="lang_pred", ppl_col="ppl",
             exact=exact_thresholds, rel_err=1e-4,
@@ -299,16 +290,7 @@ def run_filter_job(
                 "_clf_z"
             )
         # langid + per-language scoring FUSED into one ArrowEvalPython stage
-        # (spark/scoring.make_langid_score_udf — value-identical to the
-        # two-stage chain, pytest-pinned; halves the JVM<->Python crossings)
-        fused = make_langid_score_udf(bc_langid, bc_models)
-        chunk = (
-            chunk.withColumn("ls", fused(F.col("text"), F.col("text_scrubbed")))
-            .withColumn("lang_pred", F.col("ls.lang"))
-            .withColumn("lang_conf", F.col("ls.lang_conf"))
-            .select("*", "ls.log10_prob", "ls.tokens", "ls.oov", "ls.ppl")
-            .drop("ls")
-        )
+        chunk = with_langid_scores(chunk, bc_langid, bc_models)
         chunk = with_buckets(chunk, thresholds, lang_col="lang_pred", ppl_col="ppl")
         chunk = decide(chunk)
         extra_cols: list[str] = []

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..pipeline.extract import with_extracted_text
 from ..pipeline.quality import decide, rule_columns, with_buckets
 from ..pipeline.scrub import scrub_text
-from ..spark.scoring import make_langid_score_udf
+from ..spark.scoring import with_langid_scores
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -31,24 +31,14 @@ def filter_transform(
 ) -> DataFrame:
     """The stateless filter plan — valid on batch AND streaming DataFrames.
 
-    langid + per-language KenLM scoring run FUSED in one ArrowEvalPython
-    stage (spark/scoring.make_langid_score_udf): as separate UDFs the
-    scoring stage consumes langid's output column, so Spark cannot combine
-    them and every batch crosses JVM<->Python twice; the fused kernel is
-    value-identical (pytest-pinned) and halves the crossings."""
+    The decision columns come from the same code as the batch job's chunk
+    body (spark/scoring.with_langid_scores: langid + per-language KenLM
+    scoring fused in one ArrowEvalPython stage); with the job's frozen
+    thresholds the rows equal the job's output (pytest-pinned)."""
     df = with_extracted_text(pages)
     df = df.withColumn("text_scrubbed", scrub_text(F.col("text")))
     df = rule_columns(df, text_col="text_scrubbed")
-    fused = make_langid_score_udf(bc_langid, bc_models)
-    df = (
-        df.withColumn("ls", fused(F.col("text"), F.col("text_scrubbed")))
-        .withColumn("lang_pred", F.col("ls.lang"))
-        .withColumn("lang_conf", F.col("ls.lang_conf"))
-        .select(
-            "*", "ls.log10_prob", "ls.tokens", "ls.oov", "ls.ppl"
-        )
-        .drop("ls")
-    )
+    df = with_langid_scores(df, bc_langid, bc_models)
     df = with_buckets(df, thresholds, lang_col="lang_pred", ppl_col="ppl")
     return decide(df)
 

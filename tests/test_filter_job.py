@@ -334,3 +334,43 @@ def test_filter_job_classifier_prefilter(spark, pages, tmp_path):
     ).count() == 0
     m = json.load(open(os.path.join(out, "_chunk_0.json")))
     assert m["stages"]["classifier_prefilter"] == -1.0
+
+
+def test_job_rows_equal_filter_transform(spark, tmp_path):
+    """The job's chunk body and the stream's filter_transform build the
+    decision from the same projection: with the job's frozen thresholds,
+    filter_transform over the same pages yields the job's rows exactly."""
+    from collections import Counter
+
+    from kenlm_rs_spark.pipeline.corpus import generate_pages_df
+    from kenlm_rs_spark.pipeline.filter_job import (
+        OUTPUT_COLUMNS,
+        load_language_models,
+        run_filter_job,
+    )
+    from kenlm_rs_spark.pipeline.langid import default_langid
+    from kenlm_rs_spark.streaming.stream_filter import filter_transform
+
+    pages = generate_pages_df(spark, 200).cache()
+    out = str(tmp_path / "job")
+    totals = run_filter_job(spark, pages, out, LM_DIR, n_chunks=2)
+    assert totals["docs"] == 200
+    job = Counter(
+        tuple(r) for r in spark.read.parquet(out).select(OUTPUT_COLUMNS).collect()
+    )
+
+    with open(os.path.join(out, "_thresholds.json")) as f:
+        thresholds = {k: tuple(v) for k, v in json.load(f).items()}
+    bc_langid = spark.sparkContext.broadcast(default_langid())
+    stream = Counter(
+        tuple(r)
+        for r in filter_transform(
+            pages, bc_langid, load_language_models(spark, LM_DIR), thresholds
+        )
+        .select(OUTPUT_COLUMNS)
+        .collect()
+    )
+    pages.unpersist()
+    assert stream == job
+    keep = OUTPUT_COLUMNS.index("keep")
+    assert {r[keep] for r in job} == {True, False}

@@ -1,9 +1,12 @@
 """Streaming quality filter: stream == batch exactly (the chain is a
-stateless map once thresholds are pre-fitted, so no relaxation at all)."""
+stateless map once thresholds are pre-fitted, so no relaxation at all).
+
+`filter_transform` runs on a file stream into a memory sink and every column
+it produces is compared with the same transform on the batch frame."""
 
 import time
 
-from pyspark.sql import functions as F
+from kenlm_rs_spark.lm.model import NGramModel
 
 
 def _drain_and_stop(q, n_input_rows: int, timeout: int = 240) -> None:
@@ -20,30 +23,40 @@ def _drain_and_stop(q, n_input_rows: int, timeout: int = 240) -> None:
 
 
 def test_stream_filter_equals_batch(spark, tmp_path):
+    from kenlm_rs_spark.pipeline.corpus import generate_pages_local
+    from kenlm_rs_spark.pipeline.langid import default_langid
     from kenlm_rs_spark.pipeline.quality import ppl_thresholds
-    from kenlm_rs_spark.spark.scoring import broadcast_model
-    from kenlm_rs_spark.streaming.filter_stream import filter_stream
+    from kenlm_rs_spark.streaming.stream_filter import PAGES_SCHEMA, filter_transform
 
-    bc = broadcast_model(spark, "fixtures/lms/en.arpa")
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text", F.col("lang").alias("lang_pred"))
-    )
     in_dir = str(tmp_path / "in")
-    docs.write.parquet(in_dir)
-    n = docs.count()
+    spark.createDataFrame(generate_pages_local(80)).select(
+        "url", "warc_ts", "html", "text", "lang"
+    ).write.parquet(in_dir)
+    pages = spark.read.parquet(in_dir)
+    n = pages.count()
+
+    bc_langid = spark.sparkContext.broadcast(default_langid())
+    bc_models = {
+        lang: spark.sparkContext.broadcast(NGramModel.load(f"fixtures/lms/{lang}.arpa"))
+        for lang in ("en", "de", "fr")
+    }
 
     # thresholds are fit OFFLINE on the batch snapshot (production shape),
     # then applied identically to the batch df and the stream
-    batch_scored = filter_stream(docs, bc, {})  # bucket-free pass for ppl
-    thr = ppl_thresholds(batch_scored, lang_col="lang_pred", ppl_col="ppl")
-    want = {tuple(r) for r in filter_stream(docs, bc, thr).collect()}
+    thr = ppl_thresholds(
+        filter_transform(pages, bc_langid, bc_models, {}),
+        lang_col="lang_pred",
+        ppl_col="ppl",
+    )
+    batch = filter_transform(pages, bc_langid, bc_models, thr)
+    # binary columns are not hashable row members; everything else is compared
+    cols = [f.name for f in batch.schema.fields if f.dataType.typeName() != "binary"]
+    want = sorted(tuple(r) for r in batch.select(cols).collect())
 
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang_pred string"
-    ).parquet(in_dir)
+    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
     q = (
-        filter_stream(stream, bc, thr)
+        filter_transform(stream, bc_langid, bc_models, thr)
+        .select(cols)
         .writeStream.format("memory")
         .queryName("filter_stream_out")
         .outputMode("append")
@@ -51,11 +64,11 @@ def test_stream_filter_equals_batch(spark, tmp_path):
         .start()
     )
     _drain_and_stop(q, n)
-    got = {
+    got = sorted(
         tuple(r) for r in spark.sql("SELECT * FROM filter_stream_out").collect()
-    }
+    )
     assert got == want
     assert len(got) == n
-    # every decision column is populated the same way batch populates it
-    kept = sum(1 for r in got if r[6])
-    assert 0 < kept < n
+    # both decisions occur, so the thresholds and rules actually bite
+    keep = cols.index("keep")
+    assert {r[keep] for r in got} == {True, False}

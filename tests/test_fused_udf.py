@@ -1,5 +1,5 @@
-"""Fused langid+scoring UDF: value-identical to the two-stage chain and a
-single ArrowEvalPython stage in the filter plan."""
+"""Fused langid+scoring UDF: value-identical to the in-process langid and
+scoring kernels, and a single ArrowEvalPython stage in the filter plan."""
 
 from __future__ import annotations
 
@@ -27,44 +27,54 @@ def ctx(spark):
 
 
 def test_fused_equals_two_stage_chain(spark, ctx):
+    """Row by row, the fused UDF equals the in-process kernels it wraps:
+    CharNgramLangID.predict_batch on the raw text, then score_texts with
+    the row's language model on the scrubbed text (the first model in
+    sorted order for a language without a model, 'und' included)."""
+    from kenlm_rs_spark.lm.score import score_texts
     from kenlm_rs_spark.pipeline.corpus import generate_pages_df
     from kenlm_rs_spark.pipeline.extract import with_extracted_text
-    from kenlm_rs_spark.pipeline.langid import make_langid_udf
     from kenlm_rs_spark.pipeline.scrub import scrub_text
     from kenlm_rs_spark.spark.scoring import (
+        LANGID_SCORE_SCHEMA,
         make_langid_score_udf,
-        make_multi_lm_score_udf,
     )
 
-    bc_l, bcs = ctx
+    bc_l, all_bcs = ctx
+    # no 'en' model: its rows take the fallback path
+    bcs = {l: all_bcs[l] for l in ("de", "fr", "xx")}
     df = with_extracted_text(generate_pages_df(spark, 300)).withColumn(
         "text_scrubbed", scrub_text(F.col("text"))
-    )
-
-    lid = make_langid_udf(bc_l)
-    score = make_multi_lm_score_udf(bcs)
-    two = (
-        df.withColumn("lid", lid(F.col("text")))
-        .withColumn("lm", score(F.col("text_scrubbed"), F.col("lid.lang")))
-        .select(
-            "url",
-            F.col("lid.lang").alias("lang"),
-            F.col("lid.lang_conf").alias("lang_conf"),
-            "lm.log10_prob", "lm.tokens", "lm.oov", "lm.ppl",
-        )
     )
     fused_udf = make_langid_score_udf(bc_l, bcs)
     one = df.withColumn(
         "ls", fused_udf(F.col("text"), F.col("text_scrubbed"))
-    ).select("url", "ls.*")
+    ).select("text", "text_scrubbed", "ls.*")
+    rows = one.collect()
+    assert len(rows) == 300
 
-    a = {r["url"]: r.asDict() for r in two.collect()}
-    b = {r["url"]: r.asDict() for r in one.collect()}
-    assert a.keys() == b.keys() and len(a) == 300
-    for url in a:
-        assert a[url] == b[url], (url, a[url], b[url])
+    langs, confs = bc_l.value.predict_batch([r["text"] or "" for r in rows])
+    scrubbed = [r["text_scrubbed"] or "" for r in rows]
+    want = {l: score_texts(bc.value, scrubbed) for l, bc in bcs.items()}
+    default = sorted(bcs)[0]
+    assert set(langs) - set(bcs)
+    cols = [f.name for f in LANGID_SCORE_SCHEMA]
+    for i, r in enumerate(rows):
+        res = want[langs[i] if langs[i] in bcs else default]
+        got = tuple(r[c] for c in cols)
+        exp = (
+            langs[i],
+            float(confs[i]),
+            float(res["log10_prob"][i]),
+            int(res["tokens"][i]),
+            int(res["oov"][i]),
+            float(res["ppl"][i]),
+        )
+        assert got == exp, (i, got, exp)
     # dtype parity too (lang_conf must stay float, not widen to double)
-    assert dict(two.dtypes) == dict(one.dtypes)
+    assert one.drop("text", "text_scrubbed").dtypes == [
+        (f.name, f.dataType.simpleString()) for f in LANGID_SCORE_SCHEMA
+    ]
 
 
 def test_filter_plan_has_single_python_stage(spark, ctx):

@@ -43,8 +43,14 @@ def test_snapshot_table_time_travel(spark, tmp_path):
 
 
 def test_streaming_filter_available_now(spark, tmp_path):
+    """stream == batch exactly: with thresholds fitted offline on the batch
+    output (the production shape), every column the stream writes equals
+    filter_transform on the batch frame."""
+    from collections import Counter
+
     from kenlm_rs_spark.pipeline.corpus import generate_pages_local
     from kenlm_rs_spark.pipeline.langid import default_langid
+    from kenlm_rs_spark.pipeline.quality import ppl_thresholds
     from kenlm_rs_spark.streaming.stream_filter import (
         drop_reason_rates,
         filter_transform,
@@ -64,7 +70,12 @@ def test_streaming_filter_available_now(spark, tmp_path):
         lang: spark.sparkContext.broadcast(NGramModel.load(f"fixtures/lms/{lang}.arpa"))
         for lang in ("en", "de", "fr")
     }
-    thresholds = {lang: (40.0, 120.0) for lang in ("en", "de", "fr", "xx")}
+    pages = spark.read.parquet(in_dir)
+    thresholds = ppl_thresholds(
+        filter_transform(pages, bc_langid, bc_models, {}),
+        lang_col="lang_pred",
+        ppl_col="ppl",
+    )
 
     q = start_stream_filter(
         spark, in_dir, out_dir, ck_dir, bc_langid, bc_models, thresholds
@@ -74,12 +85,12 @@ def test_streaming_filter_available_now(spark, tmp_path):
     assert got.count() == 60
     assert set(got.columns) >= {"url", "ppl", "bucket", "keep", "drop_reason"}
     # batch/stream parity: the same transform on a batch frame
-    batch = filter_transform(
-        spark.read.parquet(in_dir), bc_langid, bc_models, thresholds
-    )
-    b = {r["url"]: r["keep"] for r in batch.collect()}
-    s = {r["url"]: r["keep"] for r in got.collect()}
+    batch = filter_transform(pages, bc_langid, bc_models, thresholds)
+    s = Counter(tuple(r) for r in got.collect())
+    b = Counter(tuple(r) for r in batch.select(got.columns).collect())
     assert b == s
+    keep = got.columns.index("keep")
+    assert {r[keep] for r in s} == {True, False}
     # event-time monitoring aggregate runs on the batch frame
     rates = drop_reason_rates(batch, window="1 hour").collect()
     assert sum(r["docs"] for r in rates) == 60

@@ -1,5 +1,6 @@
-"""Duplicated-span statistics (ops/spans.py): hand-computed fractions,
-hashed==string path equivalence, and the short-doc null edge."""
+"""Duplicated-span statistics and removal (ops/spans.py): hand-computed
+fractions, hashed==string path equivalence, the short-doc null edge, and
+NULL text in span removal."""
 
 
 def test_duplicated_span_stats_hand(spark):
@@ -56,3 +57,19 @@ def test_duplicated_span_stats_hashed_equivalence(spark):
         map(tuple, duplicated_span_stats(docs, n=4, hashed=True).collect())
     )
     assert a == b
+
+
+def test_remove_duplicated_spans_null_text(spark):
+    """A NULL text cleans to '' with nothing removed; the duplicated span
+    is cut from every occurrence but the first."""
+    from kenlm_rs_spark.ops.spans import remove_duplicated_spans
+
+    docs = spark.createDataFrame(
+        [(1, "a b c x"), (2, "q a b c"), (3, None)],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: (r["cleaned_text"], r["n_removed"])
+        for r in remove_duplicated_spans(docs, n=3).collect()
+    }
+    assert got == {1: ("a b c x", 0), 2: ("q", 3), 3: ("", 0)}

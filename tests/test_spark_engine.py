@@ -61,6 +61,19 @@ def test_lmplz_normalizes(spark):
     assert mass(["a", "b"]) == pytest.approx(1.0, abs=5e-5)
 
 
+def test_lmplz_vocab_rows_skip_bos_and_null_first_token(spark):
+    """vocab_rows counts unigram types whose first token is neither <s>
+    nor NULL."""
+    from kenlm_rs_spark.builder.lmplz import _discount_and_vocab_stats
+
+    adjusted = spark.createDataFrame(
+        [(1, 3, ["<s>"]), (1, 2, ["a"]), (1, 1, [None])],
+        "n int, count long, gram array<string>",
+    )
+    _, vocab_rows = _discount_and_vocab_stats(adjusted, 1)
+    assert vocab_rows == 1
+
+
 def test_arpa_filter_ops(spark):
     sections = read_arpa(f"{REF}/test_data/arpa/lm_small.arpa")
     df = arpa_filter.arpa_to_df(spark, sections)
