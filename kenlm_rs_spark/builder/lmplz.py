@@ -7,7 +7,9 @@ mapping (SURVEY.md §2.4):
 
   A1 CorpusCount   -> explode <s>-truncated windows, groupBy(gram).count()
                       (corpus_count.cc; partial aggregation = the reference's
-                      per-block hash dedupe + combiner A2)
+                      per-block hash dedupe + combiner A2); cached, so the
+                      corpus is read and tokenized ONCE however many orders
+                      A3 and the prune flags derive from it
   A3 AdjustCounts  -> continuation counts via groupBy(suffix) +
                       countDistinct(first word); n_1..n_4 statistics and
                       Chen-Goodman eq. 26 discounts
@@ -24,9 +26,12 @@ mapping (SURVEY.md §2.4):
                       picks SMJ/broadcast after AQE)
 
 The big-data half (counting + adjustment + per-context sums) stays
-distributed; the final model (vocabulary-sized, not corpus-sized) is collected
-to the driver and emitted as ARPA, which NGramModel.from_arpa then loads for
-scoring parity with KenLM semantics.
+distributed. The final model is emitted as ARPA, which NGramModel.from_arpa
+then loads for scoring parity with KenLM semantics: ``estimate_arpa``
+collects it (vocabulary-sized, not corpus-sized); ``estimate_arpa_to_path``
+sorts it once over (order, gram) and streams it through the driver a
+partition at a time. Both release the caches ``estimate_df`` builds
+(its ``cached_deps``) once the model is written.
 
 Sentence-boundary conventions match corpus_count.cc:80-92: each sentence is
 [<s>] + tokens + [</s>]; every non-<s> position yields one window of length
@@ -38,6 +43,8 @@ from __future__ import annotations
 
 import io
 import math
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -362,9 +369,11 @@ def estimate_df(
     adjust_counts.cc pruning marks). Pruning is THE mechanism that keeps a
     web-scale model model-sized: at 100 TB an unpruned order-3+ table is
     corpus-sized, a pruned one is vocabulary-shaped."""
-    raw = raw_window_counts(df, text_col, order)
-    if prune_thresholds and any(t > 0 for t in prune_thresholds):
-        raw = raw.cache()
+    # A1 runs once: adjusted_counts reads raw once per order (and again for
+    # the <s> unigram), the prune flags once more; uncached, each reference
+    # re-scans and re-tokenizes the corpus (the filters push below the
+    # aggregate, so no exchange is reused)
+    raw = raw_window_counts(df, text_col, order).cache()
     adj = adjusted_counts(raw, order)
     adj = with_prune_flags(adj, raw, order, prune_thresholds, limit_vocab).cache()
     # scalars: uniform base 1/(vocab-1) (interpolate.hh:21-23) and gamma(eps).
@@ -398,6 +407,9 @@ def estimate_df(
         .agg(F.coalesce(F.first("gamma"), F.lit(0.0)).alias("_geps"))
         .localCheckpoint(eager=False)
     )
+    # the checkpoint persists its RDD (the LogicalRDD under the frame) at
+    # creation; this JavaRDD handle releases it with the caches
+    g_eps_rdd = g_eps_df._jdf.queryExecution().logical().rdd().toJavaRDD()
 
     gam = gammas.select(
         F.col("gram").alias("g_ctx"), F.col("n_ctx"), F.col("gamma")
@@ -465,9 +477,13 @@ def estimate_df(
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
-    return out.join(
+    out = out.join(
         gam.select(F.col("g_ctx").alias("gram"), "gamma"), "gram", "left"
     ).select("n", "gram", "p", "gamma")
+    # the caches must outlive the returned (lazy) plan; callers unpersist
+    # them via this handle once the model is consumed
+    out.cached_deps = [raw, adj, probs, gammas, g_eps_rdd, *levels]
+    return out
 
 
 def estimate_arpa_sections(
@@ -482,10 +498,14 @@ def estimate_arpa_sections(
     """Estimation -> ARPA sections (collects the final model-sized table;
     with pruning the collected table is vocabulary-shaped even at corpus
     scale — see estimate_df)."""
-    rows = estimate_df(
+    model = estimate_df(
         df, text_col, order, prune_thresholds, limit_vocab,
         interpolate_unigrams, vocab_pad,
-    ).collect()
+    )
+    try:
+        rows = model.collect()
+    finally:
+        _unpersist_deps(model)
     by_order: dict[int, list] = {}
     for r in rows:
         by_order.setdefault(r["n"], []).append(
@@ -535,6 +555,21 @@ def _arpa_line(g: tuple, p, gamma, n: int, order: int) -> str:
     return f"{lp:g}\t{' '.join(g)}\n"
 
 
+def _unpersist_deps(model: DataFrame) -> None:
+    """Release the caches estimate_df left behind for ``model``."""
+    for d in getattr(model, "cached_deps", []):
+        d.unpersist()
+
+
+def _open_sections(out, done: int, upto: int) -> None:
+    """Write the ``\\k-grams:`` headers for orders done+1..upto, each
+    preceded by the blank line that closes the section before it."""
+    for k in range(done + 1, upto + 1):
+        if k > 1:
+            out.write("\n")
+        out.write(f"\\{k}-grams:\n")
+
+
 def estimate_arpa_to_path(
     df: DataFrame,
     path: str,
@@ -546,42 +581,46 @@ def estimate_arpa_to_path(
     vocab_pad: int = 0,
 ) -> dict[int, int]:
     """Driver-memory-bounded ARPA emit for models larger than driver RAM:
-    each order is sorted DISTRIBUTEDLY (Spark range-partitioned sort on the
-    gram array) and streamed through the driver one partition at a time with
-    ``toLocalIterator`` — nothing model-sized is ever collect()ed. Output is
-    byte-identical to ``estimate_arpa`` (regression-tested). Returns the
-    per-order counts. Atomic: tmp + rename."""
-    import os
-
+    the model is sorted DISTRIBUTEDLY, once, over ``(n, gram)`` (Spark
+    range-partitioned sort) and streamed through the driver one partition
+    at a time with ``toLocalIterator`` — nothing model-sized is ever
+    collect()ed. The per-order counts are taken while streaming and the
+    section headers written as ``n`` advances, into a body file next to
+    ``path``; the ``\\data\\`` header is then written from those counts and
+    the body appended after it. Output is byte-identical to
+    ``estimate_arpa`` (regression-tested). Returns the per-order counts
+    (every order 1..``order``, zero for an empty one). Atomic: tmp +
+    rename."""
     model = estimate_df(
         df, text_col, order, prune_thresholds, limit_vocab,
         interpolate_unigrams, vocab_pad,
-    ).persist()
-    counts = {
-        int(r["n"]): int(r["c"])
-        for r in model.groupBy("n").agg(F.count("*").alias("c")).collect()
-    }
-    tmp = path + ".tmp"
-    with open(tmp, "w") as out:
-        out.write("\\data\\\n")
-        for n in range(1, order + 1):
-            out.write(f"ngram {n}={counts.get(n, 0)}\n")
-        out.write("\n")
-        for n in range(1, order + 1):
-            out.write(f"\\{n}-grams:\n")
-            lvl = (
-                model.filter(F.col("n") == n)
-                .select("gram", "p", "gamma")
-                .orderBy("gram")
-            )
-            for row in lvl.toLocalIterator(prefetchPartitions=True):
-                out.write(
-                    _arpa_line(tuple(row["gram"]), row["p"], row["gamma"], n, order)
-                )
+    )
+    rows = model.select("n", "gram", "p", "gamma").orderBy("n", "gram")
+    counts = {n: 0 for n in range(1, order + 1)}
+    body, tmp = path + ".body.tmp", path + ".tmp"
+    try:
+        with open(body, "w") as out:
+            done = 0
+            for row in rows.toLocalIterator(prefetchPartitions=True):
+                n = row["n"]
+                if n > done:
+                    _open_sections(out, done, n)
+                    done = n
+                counts[n] += 1
+                out.write(_arpa_line(tuple(row["gram"]), row["p"], row["gamma"], n, order))
+            _open_sections(out, done, order)
+            out.write("\n\\end\\\n")
+        with open(tmp, "w") as out, open(body) as src:
+            out.write("\\data\\\n")
+            for n in range(1, order + 1):
+                out.write(f"ngram {n}={counts[n]}\n")
             out.write("\n")
-        out.write("\\end\\\n")
-    os.replace(tmp, path)
-    model.unpersist()
+            shutil.copyfileobj(src, out)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(body):
+            os.remove(body)
+        _unpersist_deps(model)
     return counts
 
 

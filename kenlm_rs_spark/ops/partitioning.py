@@ -10,7 +10,7 @@ recombined in a second reduce — the classic two-level salted aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,13 +26,16 @@ def repartition_by_url(df: DataFrame, partitions: int, url_col: str = "url") -> 
 def hot_keys(df: DataFrame, key: Column, threshold_fraction: float = 0.01,
              rsd: float = 0.05) -> list:
     """Detect heavy-hitter keys holding more than ``threshold_fraction`` of
-    rows (ONE aggregate pass and ONE driver wave — r7: the total rides a
-    whole-frame window over the already-grouped counts instead of a
-    separate count() job; sum(c) == the old df.count() exactly, and the
-    long*double threshold product is the same IEEE multiply)."""
+    rows in ONE driver wave: the total is a 1-row aggregate over the grouped
+    counts (it reuses their exchange), broadcast and cross-joined back onto
+    them, so no task ever holds all (key, count) rows — a whole-frame window
+    would move them into one partition; only the per-partition partial sums
+    meet there. sum(c) == df.count() exactly, and the long*double threshold
+    product is the same IEEE multiply."""
+    counts = df.groupBy(key.alias("k")).agg(F.count("*").alias("c"))
+    total = counts.agg(F.sum("c").alias("_total"))
     rows = (
-        df.groupBy(key.alias("k")).agg(F.count("*").alias("c"))
-        .withColumn("_total", F.sum("c").over(Window.partitionBy()))
+        counts.crossJoin(F.broadcast(total))
         .filter(F.col("c") >= F.col("_total") * F.lit(threshold_fraction))
         .collect()
     )

@@ -46,7 +46,9 @@ def main(argv=None):
     ap.add_argument("--text_col", default="text")
     ap.add_argument("--stream", action="store_true",
                     help="emit via the driver-memory-bounded streaming path "
-                         "(distributed sort + toLocalIterator) for >RAM models")
+                         "for >RAM models: one distributed sort over "
+                         "(order, gram) streamed with toLocalIterator, "
+                         "per-order counts taken while streaming")
     ap.add_argument("--master", default="local[*]")
     args = ap.parse_args(argv)
 

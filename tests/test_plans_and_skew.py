@@ -2,6 +2,9 @@
 predicate pushdown reaches the parquet scan, small sides broadcast, the hot
 path stays in whole-stage codegen; salted repartitioning balances Zipf skew."""
 
+import re
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -83,6 +86,47 @@ def test_salted_repartition_balances_zipf(spark):
         .groupBy("d").count().collect()
     }
     assert got == want
+
+
+def _skewed_keys(spark):
+    """Zipf-like keys: a few heavy hitters and a long tail of singletons."""
+    rng = np.random.default_rng(7)
+    keys = [f"k{int(z)}" for z in rng.zipf(1.6, 3000)]
+    return keys, spark.createDataFrame([(k,) for k in keys], "k string")
+
+
+def test_hot_keys_match_python_count(spark):
+    keys, df = _skewed_keys(spark)
+    for frac in (0.01, 0.05):
+        want = {k for k, c in Counter(keys).items() if c >= len(keys) * frac}
+        got = set(pt.hot_keys(df, F.col("k"), frac))
+        assert got == want and want
+
+
+def test_hot_keys_plan_has_no_single_partition_window(spark, monkeypatch):
+    """The total rides a broadcast 1-row aggregate: no Window, and the
+    keyed (k, c) rows never meet in one partition — the only SinglePartition
+    exchange carries the per-partition partial sums of that aggregate."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    collected = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        collected.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    _, df = _skewed_keys(spark)
+    pt.hot_keys(df, F.col("k"), 0.01)
+    plan = collected[-1]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Window" not in final
+    assert "BroadcastExchange" in final
+    lines = final.splitlines()
+    singles = [i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln]
+    for i in singles:
+        assert re.search(r"HashAggregate\(keys=\[\], functions=\[partial_", lines[i + 1])
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
