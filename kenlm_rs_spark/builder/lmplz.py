@@ -8,22 +8,40 @@ mapping (SURVEY.md §2.4):
   A1 CorpusCount   -> explode <s>-truncated windows, groupBy(gram).count()
                       (corpus_count.cc; partial aggregation = the reference's
                       per-block hash dedupe + combiner A2); cached, so the
-                      corpus is read and tokenized ONCE however many orders
-                      A3 and the prune flags derive from it
-  A3 AdjustCounts  -> continuation counts via groupBy(suffix) +
-                      countDistinct(first word); n_1..n_4 statistics and
-                      Chen-Goodman eq. 26 discounts
-                      (adjust_counts.cc:47-74; <s>-initial grams keep raw
-                      counts per adjust_counts.hh:33-56)
-  A4 InitialProbs  -> per-context Window/groupBy sums: uninterpolated
-                      u = (a - D(a))/sum, gamma = (D1 N1 + D2 N2 + D3 N3+)/sum
+                      corpus is read and tokenized ONCE
+  A3 AdjustCounts  -> repartition and sort by LAST WORD (the reference's
+                      suffix order), then one Arrow kernel cascades N -> 1
+                      per last word: continuation counts = distinct left
+                      extensions; <s>-initial grams keep raw counts
+                      (adjust_counts.hh:33-56); the <s> unigram is a 1-row
+                      sum. n_1..n_4 statistics and Chen-Goodman eq. 26
+                      discounts come from one collected aggregate
+                      (adjust_counts.cc:47-74)
+  A4 InitialProbs  -> orders >= 2 repartitioned by (n, context) (the
+                      reference's context order); one kernel sums each
+                      context: u = (a - D(a))/sum per surviving gram, with
+                      gamma = (D1 N1 + D2 N2 + D3 N3+ + pruned)/sum attached,
+                      plus one gamma row per context. The empty (unigram)
+                      context is driver scalars from a 1-row aggregate
                       (initial_probabilities.cc)
-  A5 Interpolate   -> orders ascending, join order-n with interpolated
-                      order-(n-1) on the backoff suffix; unigram base is
-                      uniform 1/(vocab-1) (interpolate.hh:21-23)
-  J1               -> the gamma join is the suffix-sorted merge join of the
-                      reference, expressed as a DataFrame equi-join (Spark
-                      picks SMJ/broadcast after AQE)
+  A5 Interpolate   -> A4 rows repartitioned by last word again (a gram, its
+                      backoff suffix and its own gamma row share it); one
+                      kernel walks the orders ascending:
+                      p = u + gamma(ctx) * p_{n-1}(suffix), unigram base
+                      uniform 1/(vocab-1) (interpolate.hh:21-23) — the
+                      suffix-sorted merge J1 without a per-order join
+
+Each kernel is a ``mapInArrow`` over a ``repartition(key)`` (hash, so a
+key's rows are in one task; never ``rebalance``, which AQE may split), so
+the job count does not grow with the order. Each partition is also sorted
+on its key (Spark's sort, which spills), and a kernel streams it one key
+at a time: a Python worker holds one last word's grams (A3, A5) or one
+context's (A4), never a whole partition. A key cannot be split, so the
+largest last word — ``</s>`` or the commonest word — bounds a worker's
+memory; more partitions do not lower that bound. The kernels evaluate each f64
+expression in one fixed order — (a - D)/sum, (((D1 N1 + D2 N2) + D3 N3+) +
+pruned)/sum, u + gamma * p_lower — with longs turned into doubles exactly,
+so the ARPA bytes depend on neither the plan nor the partition count.
 
 The big-data half (counting + adjustment + per-context sums) stays
 distributed. The final model is emitted as ARPA, which NGramModel.from_arpa
@@ -42,12 +60,15 @@ text are removed first (corpus_count.cc:175-179 forbids them).
 from __future__ import annotations
 
 import io
+import itertools
 import math
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..lm.arpa import ArpaSections, ProbBackoffNgram, ProbNgram, write_arpa
 from ..ops.textstats import TOKEN_SPLIT
@@ -59,7 +80,10 @@ RESERVED = ("<s>", "</s>", "<unk>")
 
 def _sentence_windows(df: DataFrame, text_col: str, order: int) -> DataFrame:
     """One row per (window ending at each non-<s> position): column ``gram``
-    (array<string>, length 1..order, truncated at <s>)."""
+    (array<string>, length 1..order, truncated at <s>). A NULL text is no
+    sentence: with ANSI mode off ``size(NULL)`` is -1 and it explodes into
+    NULL windows, which are dropped (a filter on the text itself would be
+    pushed below the caller's projection and evaluate it twice)."""
     toks = F.filter(
         F.split(F.col(text_col), TOKEN_SPLIT),
         lambda w: (w != "") & ~w.isin(*RESERVED),
@@ -77,7 +101,7 @@ def _sentence_windows(df: DataFrame, text_col: str, order: int) -> DataFrame:
             (i + 2) - F.greatest(i - (order - 2), F.lit(1)),
         ),
     )
-    return df.select(F.explode(grams).alias("gram"))
+    return df.select(F.explode(grams).alias("gram")).where(F.col("gram").isNotNull())
 
 
 def raw_window_counts(df: DataFrame, text_col: str, order: int) -> DataFrame:
@@ -169,61 +193,107 @@ def with_prune_flags(
     return out
 
 
+def _pylist(col: pa.Array) -> list:
+    """``col.to_pylist()`` with an array<string> as tuples, through NumPy:
+    pyarrow's per-element conversion dominates a kernel otherwise."""
+    if pa.types.is_list(col.type):
+        words = col.values.to_numpy(zero_copy_only=False).tolist()
+        offsets = col.offsets.to_numpy().tolist()
+        return [tuple(words[a:b]) for a, b in zip(offsets, offsets[1:])]
+    if col.null_count:
+        return col.to_pylist()
+    return col.to_numpy(zero_copy_only=False).tolist()
+
+
+def _groups(batches, key):
+    """The rows of a partition's Arrow batches, as tuples of Python values
+    (an array<string> as a tuple), one run of equal ``key(row)`` at a time.
+    The partition must be sorted on that key, so a kernel holds one key's
+    rows, never the whole partition."""
+    rows = (r for b in batches for r in zip(*(_pylist(c) for c in b.columns)))
+    return (run for _, run in itertools.groupby(rows, key))
+
+
+def _batches(schema: pa.Schema, rows, size: int = 8192):
+    """An iterable of ``rows`` (tuples in ``schema`` order) as Arrow record
+    batches of up to ``size`` rows, each sent as soon as it is full."""
+    rows = iter(rows)
+    while chunk := list(itertools.islice(rows, size)):
+        cols = zip(*chunk)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+
+
+def _by_key(df: DataFrame, *key) -> DataFrame:
+    """``df`` hash-partitioned on ``key`` (never ``rebalance``: AQE may split
+    a key across tasks) and sorted on it within each partition, so a kernel
+    streams one key at a time and Spark's sort, not Python, spills."""
+    return df.repartition(*key).sortWithinPartitions(*key)
+
+
+_GRAM = pa.list_(pa.string())
+_ADJUSTED = pa.schema([("gram", _GRAM), ("n", pa.int32()), ("count", pa.int64())])
+_INITIAL = pa.schema([
+    ("gram", _GRAM), ("n", pa.int32()), ("u", pa.float64()),
+    ("ctx_gamma", pa.float64()), ("gamma", pa.float64()),
+])
+_MODEL = pa.schema([
+    ("n", pa.int32()), ("gram", _GRAM), ("p", pa.float64()), ("gamma", pa.float64()),
+])
+
+
+def _adjust_kernel(order: int):
+    """A3 over one partition of ``raw`` (gram, count) hash-partitioned and
+    sorted by last word: a gram, the ``v . g`` grams its continuation count
+    counts and its suffixes all end in the same word, so the whole N -> 1
+    cascade runs per last word (the suffix-sorted pass of
+    adjust_counts.hh:33-56)."""
+
+    def adjust(rows):
+        level, bos = {}, [{} for _ in range(order)]
+        for g, count in rows:
+            if len(g) == order:
+                level[g] = count
+            elif g[0] == "<s>":
+                bos[len(g)][g] = count  # <s>-truncated window: raw count
+        yield from ((g, order, c) for g, c in level.items())
+        for n in range(order - 1, 0, -1):
+            cont: dict = {}
+            for g in level:  # distinct grams => distinct left extensions v
+                if g[1] != "<s>":
+                    cont[g[1:]] = cont.get(g[1:], 0) + 1
+            cont.update(bos[n])
+            level = cont
+            yield from ((g, n, c) for g, c in level.items())
+
+    def kernel(batches):
+        words = _groups(batches, lambda r: r[0][-1])
+        yield from _batches(_ADJUSTED, (r for rows in words for r in adjust(rows)))
+
+    return kernel
+
+
 def adjusted_counts(raw: DataFrame, order: int) -> DataFrame:
     """A3: order-N grams keep raw counts; each lower order n gets
     continuation counts |{v : (v . g) in adjusted_(n+1)}| — cascading from
     the order above, as AdjustCounts derives all orders in one suffix-sorted
     pass (adjust_counts.hh:33-56) — except <s>-initial grams, which keep raw
-    window counts (nothing can precede <s>). The <s> unigram itself carries
-    the sentence count (its raw occurrence count)."""
-    adj_above = raw.filter(F.col("n") == order).select("gram", "n", "count")
-    parts = [adj_above]
-    for n in range(order - 1, 0, -1):
-        cont = (
-            adj_above.withColumn("suffix", F.slice("gram", 2, n))
-            .filter(F.element_at("suffix", 1) != "<s>")
-            .groupBy(F.col("suffix").alias("gram"))
-            .agg(F.count("*").alias("count"))  # rows are distinct grams => distinct v
-            .withColumn("n", F.lit(n))
-            .select("gram", "n", "count")
-        )
-        bos = raw.filter(
-            (F.col("n") == n) & (F.element_at("gram", 1) == "<s>")
-        ).select("gram", "n", "count")
-        if n == 1:
-            # <s> unigram: raw count = number of sentences = sum of <s>-initial
-            # bigram window counts
-            bos_uni = (
-                raw.filter((F.col("n") == 2) & (F.element_at("gram", 1) == "<s>"))
-                .agg(F.sum("count").alias("count"))
-                .select(
-                    F.array(F.lit("<s>")).alias("gram"),
-                    F.lit(1).alias("n"),
-                    F.col("count"),
-                )
-            )
-            bos = bos.unionByName(bos_uni)
-        adj_above = cont.unionByName(bos)
-        parts.append(adj_above)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def discount_stats(adjusted: DataFrame, order: int) -> dict[int, tuple]:
-    """n_j statistics and Chen-Goodman eq. 26 discounts per order, with the
-    lmplz fallback for degenerate data (adjust_counts.cc:40-74)."""
-    rows = (
-        adjusted.filter(F.col("count") <= 4)
-        .groupBy("n", "count")
-        .agg(F.count("*").alias("freq"))
-        .collect()
+    window counts (nothing can precede <s>). One Arrow kernel runs the
+    cascade one last word at a time. The <s> unigram itself carries the
+    sentence count (its raw occurrence count), a 1-row sum over the
+    <s>-initial bigram windows."""
+    adj = _by_key(raw.select("gram", "count"), F.element_at("gram", -1)).mapInArrow(
+        _adjust_kernel(order), from_arrow_schema(_ADJUSTED)
     )
-    njs = {n: {j: 0 for j in range(1, 5)} for n in range(1, order + 1)}
-    for r in rows:
-        njs[r["n"]][int(r["count"])] = r["freq"]
-    return _discounts_from_njs(njs, order)
+    if order < 2:
+        return adj
+    bos_uni = (
+        raw.filter((F.col("n") == 2) & (F.element_at("gram", 1) == "<s>"))
+        .agg(F.sum("count").alias("count"))
+        .select(F.array(F.lit("<s>")).alias("gram"), F.lit(1).alias("n"), "count")
+    )
+    return adj.unionByName(bos_uni)
 
 
 def _discount_and_vocab_stats(
@@ -277,11 +347,87 @@ def _discounts_from_njs(njs: dict, order: int) -> dict[int, tuple]:
     return discounts
 
 
+def _context_kernel(discounts: dict):
+    """A4 over one partition of the order >= 2 adjusted grams, hash-
+    partitioned and sorted by (n, context): one context's grams at a time,
+    its sums Python integer sums (initial_probabilities.cc:158-190) and each
+    f64 expression evaluated as the unigram level's SQL does. Emits u for
+    each surviving gram with its context's gamma attached, then the
+    context's gamma row (u NULL)."""
+
+    def context(rows):
+        denom = mass = 0
+        survivors, kinds = [], [0, 0, 0, 0]  # n1 n2 n3+ at index 1..3
+        for gram, n, count, pruned in rows:
+            denom += count
+            if pruned:
+                mass += count
+            else:
+                survivors.append((gram, count))
+                kinds[min(count, 3)] += 1
+        _, d1, d2, d3 = d = discounts[n]
+        gamma = (d1 * kinds[1] + d2 * kinds[2] + d3 * kinds[3] + mass) / denom
+        for g, count in survivors:
+            yield g, n, (count - d[min(count, 3)]) / denom, gamma, None
+        yield gram[:-1], n - 1, None, None, gamma
+
+    def kernel(batches):
+        contexts = _groups(batches, lambda r: (r[1], r[0][:-1]))
+        yield from _batches(_INITIAL, (r for rows in contexts for r in context(rows)))
+
+    return kernel
+
+
+def _initial_table(adjusted: DataFrame, discounts: dict, order: int):
+    """A4 as one frame (gram, n, u, ctx_gamma, gamma) plus gamma(eps).
+
+    Probability rows carry u and ctx_gamma (gamma NULL); context rows carry
+    the context's gamma with n = its length (u NULL). The empty context is
+    the whole unigram level: its sums come from one 1-row aggregate
+    collected to driver scalars, so no partition holds the vocabulary.
+    gamma(eps) is None when there are no unigrams."""
+    d = {n: tuple(float(x) for x in discounts[n]) for n in range(1, order + 1)}
+    if "pruned" not in adjusted.columns:
+        adjusted = adjusted.withColumn("pruned", F.lit(False))
+    higher = (
+        adjusted.filter(F.col("n") >= 2)
+        .select("gram", "n", "count", "pruned")
+        .transform(lambda t: _by_key(t, "n", F.slice("gram", 1, F.col("n") - 1)))
+        .mapInArrow(_context_kernel(d), from_arrow_schema(_INITIAL))
+    )
+    # the <s> unigram never receives probability mass (p(<s>) = 0,
+    # interpolate.hh:21-23) and is excluded from unigram normalization —
+    # verified against real lmplz output: unigram mass excl. <s> is exactly 1
+    uni = adjusted.filter((F.col("n") == 1) & (F.element_at("gram", 1) != "<s>"))
+    surv, count = ~F.col("pruned"), F.col("count")
+    s = uni.agg(
+        F.sum("count").alias("denom"),
+        F.sum(F.when(surv & (count == 1), 1).otherwise(0)).alias("n1"),
+        F.sum(F.when(surv & (count == 2), 1).otherwise(0)).alias("n2"),
+        F.sum(F.when(surv & (count >= 3), 1).otherwise(0)).alias("n3p"),
+        F.sum(F.when(F.col("pruned"), count).otherwise(0)).alias("mass"),
+    ).first()
+    if s["denom"] is None:
+        return higher, None
+    _, d1, d2, d3 = d[1]
+    g_eps = (d1 * s["n1"] + d2 * s["n2"] + d3 * s["n3p"] + s["mass"]) / s["denom"]
+    discount = F.when(count >= 3, d3).when(count == 2, d2).otherwise(d1)
+    unigrams = uni.filter(surv).select(
+        "gram",
+        "n",
+        ((count - discount) / F.lit(s["denom"])).alias("u"),
+        F.lit(g_eps).alias("ctx_gamma"),
+        F.lit(None).cast("double").alias("gamma"),
+    )
+    return unigrams.unionByName(higher), g_eps
+
+
 def initial_probabilities(adjusted: DataFrame, discounts: dict, order: int):
     """A4: per-order uninterpolated probs + per-context gammas.
 
-    Returns (probs_df: gram,n,u ; gammas_df: ctx,n_ctx,gamma) where gamma is
-    keyed by the CONTEXT gram (length n-1) it backs off from.
+    Returns (probs_df: gram,n,u,ctx_gamma ; gammas_df: gram,n_ctx,gamma)
+    where gamma is keyed by the CONTEXT gram (length n-1) it backs off from
+    and ctx_gamma is the gamma of the gram's own context.
 
     Pruning semantics per initial_probabilities.cc:158-190 (AddRight): ALL
     grams (pruned included) contribute to the context denominator; the n1/n2/
@@ -289,61 +435,54 @@ def initial_probabilities(adjusted: DataFrame, discounts: dict, order: int):
     pruned grams' mass is folded into gamma ("Makes model sum to 1 with
     pruning"), so the conditional distribution stays normalized. Pruned grams
     are dropped from the probs output (PruneNGramStream)."""
-    sc_disc = [
-        (n, float(discounts[n][1]), float(discounts[n][2]), float(discounts[n][3]))
-        for n in range(1, order + 1)
-    ]
-    disc_df = adjusted.sparkSession.createDataFrame(
-        sc_disc, "n int, d1 double, d2 double, d3 double"
+    table, g_eps = _initial_table(adjusted, discounts, order)
+    probs = table.filter(F.col("gamma").isNull()).drop("gamma")
+    gammas = table.filter(F.col("gamma").isNotNull()).select(
+        "gram", F.col("n").alias("n_ctx"), "gamma"
     )
-    if "pruned" not in adjusted.columns:
-        adjusted = adjusted.withColumn("pruned", F.lit(False))
-    # the <s> unigram never receives probability mass (p(<s>) = 0,
-    # interpolate.hh:21-23) and is excluded from unigram normalization —
-    # verified against real lmplz output: unigram mass excl. <s> is exactly 1
-    a = adjusted.filter(~((F.col("n") == 1) & (F.element_at("gram", 1) == "<s>")))
-    a = a.join(F.broadcast(disc_df), "n")
-    a = a.withColumn("ctx", F.slice("gram", 1, F.col("n") - 1))
-    surv = ~F.col("pruned")
-    grp = a.groupBy("n", "ctx").agg(
-        F.sum("count").alias("denom"),
-        F.sum(F.when(surv & (F.col("count") == 1), 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(surv & (F.col("count") == 2), 1).otherwise(0)).alias("n2"),
-        F.sum(F.when(surv & (F.col("count") >= 3), 1).otherwise(0)).alias("n3p"),
-        F.sum(F.when(F.col("pruned"), F.col("count")).otherwise(0)).alias("pruned_mass"),
-        F.first("d1").alias("d1"),
-        F.first("d2").alias("d2"),
-        F.first("d3").alias("d3"),
-    )
-    gammas = grp.select(
-        F.col("ctx").alias("gram"),
-        (F.col("n") - 1).alias("n_ctx"),
-        (
-            (
-                F.col("d1") * F.col("n1")
-                + F.col("d2") * F.col("n2")
-                + F.col("d3") * F.col("n3p")
-                + F.col("pruned_mass")
-            )
-            / F.col("denom")
-        ).alias("gamma"),
-    )
-    probs = (
-        a.filter(surv)
-        .join(grp.select("n", "ctx", "denom"), ["n", "ctx"])
-        .withColumn(
-            "D",
-            F.when(F.col("count") >= 3, F.col("d3"))
-            .when(F.col("count") == 2, F.col("d2"))
-            .otherwise(F.col("d1")),
-        )
-        .select(
-            "gram",
-            "n",
-            ((F.col("count") - F.col("D")) / F.col("denom")).alias("u"),
-        )
-    )
+    if g_eps is not None:
+        gammas = gammas.unionByName(adjusted.sparkSession.createDataFrame(
+            [([], 0, g_eps)], "gram array<string>, n_ctx int, gamma double"
+        ))
     return probs, gammas
+
+
+def _interpolate_kernel(order: int, uniform: float, uni_add: float, unk_p: float):
+    """A5 over one partition of the A4 rows hash-partitioned and sorted by
+    last word: a gram's backoff suffix and its own gamma row (the gram as a
+    context) end in its last word, so the ascending pass over the orders
+    runs per last word (interpolate.hh:21-23; the suffix-sorted merge J1).
+    Each p is ``u + gamma(ctx) * p_lower(suffix)``, a missing gamma read as
+    0.0 and a missing suffix as the uniform base."""
+
+    def interpolate(rows):
+        gammas, levels = {}, [{} for _ in range(order + 1)]
+        for gram, n, u, ctx_gamma, gamma in rows:
+            if gamma is not None:
+                gammas[gram] = gamma
+            else:
+                levels[n][gram] = (u, ctx_gamma)
+        lower = {}
+        for n in range(1, order + 1):
+            ps = {}
+            for g, (u, ctx_gamma) in levels[n].items():
+                if n > 1:
+                    cg = 0.0 if ctx_gamma is None else ctx_gamma
+                    ps[g] = u + cg * lower.get(g[1:], uniform)
+                elif g == ("<unk>",):
+                    ps[g] = unk_p
+                elif g == ("<s>",):
+                    ps[g] = 0.0
+                else:
+                    ps[g] = u + uni_add
+                yield n, g, ps[g], gammas.get(g)
+            lower = ps
+
+    def kernel(batches):
+        words = _groups(batches, lambda r: r[0][-1])
+        yield from _batches(_MODEL, (r for rows in words for r in interpolate(rows)))
+
+    return kernel
 
 
 def estimate_df(
@@ -358,10 +497,16 @@ def estimate_df(
     """Full estimation as a distributed plan: returns a DataFrame
     (n int, gram array<string>, p double, gamma double) — interpolated
     probability and backoff weight (gamma; null when the gram is never a
-    context). Nothing corpus- or model-sized is collected: A5 is a chain of
-    per-order suffix joins (the reference's suffix-sorted merge, J1), so this
-    scales to models that do not fit on the driver; sinks may write it as a
-    parquet model table or collect it when broadcast-sized.
+    context). After the cached A1 counts, A3, A4 and A5 are one Arrow
+    kernel each over a hash repartition — by last word, by (n, context),
+    by last word: the reference's suffix, context and suffix sort orders —
+    so the job count does not grow with the order. The driver collects
+    only the count-of-counts rows and the 1-row unigram sums; nothing
+    corpus- or model-sized. A kernel streams its sorted partition one key
+    at a time, so a Python worker holds the rows of its largest key — the
+    commonest last word, in A3 a share of all raw windows — not a
+    partition. Sinks may write the result as a parquet model table or
+    collect it when broadcast-sized.
 
     ``prune_thresholds`` = lmplz ``--prune`` (one non-decreasing threshold per
     order; grams with raw count <= threshold are dropped, their mass folded
@@ -369,120 +514,54 @@ def estimate_df(
     adjust_counts.cc pruning marks). Pruning is THE mechanism that keeps a
     web-scale model model-sized: at 100 TB an unpruned order-3+ table is
     corpus-sized, a pruned one is vocabulary-shaped."""
-    # A1 runs once: adjusted_counts reads raw once per order (and again for
-    # the <s> unigram), the prune flags once more; uncached, each reference
-    # re-scans and re-tokenizes the corpus (the filters push below the
-    # aggregate, so no exchange is reused)
-    raw = raw_window_counts(df, text_col, order).cache()
-    adj = adjusted_counts(raw, order)
-    adj = with_prune_flags(adj, raw, order, prune_thresholds, limit_vocab).cache()
-    # scalars: uniform base 1/(vocab-1) (interpolate.hh:21-23) and gamma(eps).
-    # Vocabulary size counts ALL types (pre-prune adjusted unigrams excl <s>),
-    # matching the reference's corpus-count vocab size.  ONE aggregation
-    # job yields both the count-of-counts and the vocab size (r7 — the
-    # separate .count() cost an extra sequential wave over the cache).
-    discounts, vocab_rows = _discount_and_vocab_stats(adj, order)
-    probs, gammas = initial_probabilities(adj, discounts, order)
-    probs = probs.cache()
-    gammas = gammas.cache()
     # --vocab_pad (lmplz_main.cc:99,151-152; pipeline.cc:281): pretend the
     # vocabulary has at least vocab_pad types, reserving uniform mass for
     # unseen words; requires unigram interpolation
     if vocab_pad and not interpolate_unigrams:
         raise ValueError("--vocab_pad requires --interpolate_unigrams")
+    # A1 runs once: A3, the <s> unigram and the prune flags all read raw;
+    # uncached, each reference re-scans and re-tokenizes the corpus
+    raw = raw_window_counts(df, text_col, order).cache()
+    counts = adjusted_counts(raw, order)
+    # count thresholds split the A3 output into one branch per order, and
+    # Spark re-runs the opaque kernel under each branch: cache it so A3 runs
+    # once, and release it once the flagged cache is filled
+    split = bool(prune_thresholds) and any(t > 0 for t in prune_thresholds)
+    if split:
+        counts = counts.cache()
+    adj = with_prune_flags(counts, raw, order, prune_thresholds, limit_vocab).cache()
+    # uniform base 1/(vocab-1) (interpolate.hh:21-23). Vocabulary size
+    # counts ALL types (pre-prune adjusted unigrams excl <s>), matching the
+    # reference's corpus-count vocab size; ONE aggregation job yields both
+    # the count-of-counts and the vocab size
+    discounts, vocab_rows = _discount_and_vocab_stats(adj, order)
+    if split:
+        counts.unpersist()
+    table, g_eps = _initial_table(adj, discounts, order)
+    g_eps = 0.0 if g_eps is None else g_eps
     uniform = 1.0 / max(vocab_pad, vocab_rows + 1, 1)  # + <unk>
-    # gamma(eps) as a LAZY 1-row frame (r7 second pass — the former
-    # collect() was one more sequential materialization wave over the
-    # cached gammas; the broadcast cross join evaluates the same JVM
-    # arithmetic inside the final job): g_eps_df has exactly one row,
-    # coalescing the empty-filter case to 0.0 like the old Python default.
-    # lazy checkpoint: the 1-row frame is cross-joined into p1/extra, whose
-    # lineage is embedded in EVERY interpolation level — without truncation
-    # the gammas→adjusted→raw subtree nests once more per level and the
-    # order-5 plan tree explodes (driver-heap OOM observed in a pressured
-    # shared session); the checkpoint cuts it to a 1-row RDD scan while
-    # still materializing inside the first consuming job (no extra wave)
-    g_eps_df = (
-        gammas.filter(F.col("n_ctx") == 0)
-        .agg(F.coalesce(F.first("gamma"), F.lit(0.0)).alias("_geps"))
-        .localCheckpoint(eager=False)
-    )
-    # the checkpoint persists its RDD (the LogicalRDD under the frame) at
-    # creation; this JavaRDD handle releases it with the caches
-    g_eps_rdd = g_eps_df._jdf.queryExecution().logical().rdd().toJavaRDD()
-
-    gam = gammas.select(
-        F.col("gram").alias("g_ctx"), F.col("n_ctx"), F.col("gamma")
-    )
-
     # order 1 (initial_probabilities.cc:218-250): interpolated (default)
     # p = u + gamma(eps) * uniform with <unk> a zeroton; SRI style
     # (--interpolate_unigrams 0) gives ALL the interpolation mass to <unk>:
-    # p(w) = u(w), p(<unk>) = gamma(eps).  The g_eps*uniform product is the
-    # same IEEE double multiply the old Python-side literal performed.
+    # p(w) = u(w), p(<unk>) = gamma(eps)
     if interpolate_unigrams:
-        uni_add = F.col("_geps") * F.lit(uniform)
-        unk_mass = F.col("_geps") * F.lit(uniform)
+        uni_add = unk_p = g_eps * uniform
     else:
-        uni_add = F.lit(0.0)
-        unk_mass = F.col("_geps")
-    p1 = (
-        probs.filter(F.col("n") == 1)
-        .crossJoin(F.broadcast(g_eps_df))
-        .select("gram", (F.col("u") + uni_add).alias("p"))
+        uni_add, unk_p = 0.0, g_eps
+    # <unk> and <s> land in their word's partition like any unigram; the
+    # kernel sets their p
+    reserved = df.sparkSession.createDataFrame(
+        [(["<unk>"], 1), (["<s>"], 1)], "gram array<string>, n int"
     )
-    extra = (
-        df.sparkSession.range(1)
-        .crossJoin(F.broadcast(g_eps_df))
-        .select(
-            F.array(F.lit("<unk>")).alias("gram"), unk_mass.alias("p")
-        )
-        .unionByName(
-            df.sparkSession.range(1).select(
-                F.array(F.lit("<s>")).alias("gram"),
-                F.lit(0.0).alias("p"),
-            )
+    out = (
+        _by_key(table.unionByName(reserved, allowMissingColumns=True), F.element_at("gram", -1))
+        .mapInArrow(
+            _interpolate_kernel(order, uniform, uni_add, unk_p), from_arrow_schema(_MODEL)
         )
     )
-    p1 = p1.join(extra.select("gram"), "gram", "left_anti").unionByName(extra)
-    levels = [p1.withColumn("n", F.lit(1)).cache()]
-
-    # orders 2..N: p_n = u_n + gamma(ctx) * p_{n-1}(suffix) — suffix join chain
-    for n in range(2, order + 1):
-        pn = probs.filter(F.col("n") == n)
-        pn = pn.withColumn("ctx", F.slice("gram", 1, n - 1)).withColumn(
-            "suffix", F.slice("gram", 2, n - 1)
-        )
-        pn = pn.join(
-            gam.filter(F.col("n_ctx") == n - 1).select(
-                F.col("g_ctx").alias("ctx"), F.col("gamma").alias("ctx_gamma")
-            ),
-            "ctx",
-            "left",
-        )
-        lower = levels[n - 2].select(
-            F.col("gram").alias("suffix"), F.col("p").alias("p_lower")
-        )
-        pn = pn.join(lower, "suffix", "left")
-        pn = pn.select(
-            "gram",
-            (
-                F.col("u")
-                + F.coalesce(F.col("ctx_gamma"), F.lit(0.0))
-                * F.coalesce(F.col("p_lower"), F.lit(uniform))
-            ).alias("p"),
-        ).withColumn("n", F.lit(n)).cache()
-        levels.append(pn)
-
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    out = out.join(
-        gam.select(F.col("g_ctx").alias("gram"), "gamma"), "gram", "left"
-    ).select("n", "gram", "p", "gamma")
     # the caches must outlive the returned (lazy) plan; callers unpersist
     # them via this handle once the model is consumed
-    out.cached_deps = [raw, adj, probs, gammas, g_eps_rdd, *levels]
+    out.cached_deps = [raw, adj]
     return out
 
 

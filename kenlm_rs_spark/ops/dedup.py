@@ -205,6 +205,24 @@ def lsh_jaccard_dedup(
     return out
 
 
+def within_freq_cap(rows: DataFrame, key: str, cap: int) -> DataFrame:
+    """The rows whose ``key`` occurs in 2..``cap`` rows, filtered BEFORE any
+    posting list is built: the count is a window over the key's hash
+    partition (spillable rows, not an aggregation buffer), and a
+    ``groupBy(key)`` above reuses that exchange — so no list ever holds more
+    than ``cap`` elements and the plan keeps its exchange count. The price
+    is one Sort of the rows by key inside each partition, and the
+    map-side partial ``collect_list`` no longer combines anything. A
+    count-first aggregate plus a semi-join avoids the sort but builds the
+    rows twice, and measured slower."""
+    freq = F.count("*").over(Window.partitionBy(key))
+    return (
+        rows.withColumn("_freq", freq)
+        .filter((F.col("_freq") >= 2) & (F.col("_freq") <= cap))
+        .drop("_freq")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -219,11 +237,12 @@ def ngram_jaccard_pairs(
     fan-out cap that keeps the candidate count near-linear at corpus scale
     (a shingle in f docs contributes f^2 pairs).
 
-    Shape (r7, guide §2.4): ONE groupBy(shingle) collects the (capped,
-    doc-id-sorted) posting list of (doc_id, set_size) structs; pairs are
-    generated in-plan from that MATERIALIZED list column (bounded at
-    max_shingle_freq elements — O(cap^2) HOF work over a leaf column, which
-    is exactly the pair count itself), then one pair aggregate.  This
+    Shape (r7, guide §2.4): over-cap shingles are dropped by a window count
+    (``within_freq_cap``) before ONE groupBy(shingle), on the same exchange,
+    collects the doc-id-sorted posting list of (doc_id, set_size) structs;
+    pairs are generated in-plan from that MATERIALIZED list column (bounded
+    at max_shingle_freq elements — O(cap^2) HOF work over a leaf column,
+    which is exactly the pair count itself), then one pair aggregate.  This
     replaces the former frequency groupBy + broadcast filter join +
     shingle-keyed self-join — two extra passes over the exploded shingle
     table and its cache disappear.  Pair sets and counts are identical:
@@ -232,9 +251,9 @@ def ngram_jaccard_pairs(
     old a.doc_id < b.doc_id join condition."""
     sh = shingle_table(df, id_col, text_col, shingle_n)
     posting = (
-        sh.groupBy("shingle")
+        within_freq_cap(sh, "shingle", max_shingle_freq)
+        .groupBy("shingle")
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "set_size"))).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_shingle_freq))
     )
     pairs = posting.select(
         F.explode(

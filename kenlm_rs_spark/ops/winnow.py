@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .dedup import within_freq_cap
+
 K_GRAM = 8
 WINDOW = 4
 
@@ -102,22 +104,24 @@ def winnow_candidate_pairs(
     docs contributes f^2 candidate rows; capping bounds the blow-up at
     corpus scale).
 
-    Shape (r7, guide §2.4): ONE groupBy(fingerprint) collects the (capped,
-    sorted) doc-id posting list, pairs are generated in-plan from that
-    MATERIALIZED list column (bounded at max_fp_freq elements, so the HOF
-    is O(cap^2) on a leaf column — not the inlined-subexpression pathology),
-    and one pair aggregate finishes.  This replaces the former frequency
-    groupBy + filter join + fingerprint-keyed self-join: 3 exchanges of the
-    exploded table + a join collapse into a single exchange, and the
-    fingerprint table no longer needs a cache (single consumer).  Pair sets
+    Shape (r7, guide §2.4): over-cap fingerprints are dropped by a window
+    count (``within_freq_cap``) before ONE groupBy(fingerprint), on the same
+    exchange, collects the sorted doc-id posting list; pairs are generated
+    in-plan from that MATERIALIZED list column (bounded at max_fp_freq
+    elements, so the HOF is O(cap^2) on a leaf column — not the
+    inlined-subexpression pathology), and one pair aggregate finishes.
+    This replaces the former frequency groupBy + filter join +
+    fingerprint-keyed self-join: 3 exchanges of the exploded table + a join
+    collapse into a single exchange, and the fingerprint table no longer
+    needs a cache (single consumer).  Pair sets
     and counts are identical: list elements are distinct doc_ids (each doc's
     fingerprints are a sorted set), sort_array gives id_a < id_b exactly as
     the old a.doc_id < b.doc_id join condition did."""
     t = winnow_table(df, id_col, text_col, k, w)
     posting = (
-        t.groupBy("fingerprint")
+        within_freq_cap(t, "fingerprint", max_fp_freq)
+        .groupBy("fingerprint")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_fp_freq))
     )
     pairs = posting.select(
         F.explode(

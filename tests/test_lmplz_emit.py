@@ -16,8 +16,11 @@ from kenlm_rs_spark.pipeline.corpus import training_corpus
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the cached RDDs. Compared as sets, not counts: the context
+    cleaner may release an earlier test's cache during the call, which a
+    count reads as a change while every cache the call built is gone."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.fixture(scope="module")
@@ -43,16 +46,33 @@ def test_corpus_read_once(spark, small_corpus, tmp_path, order):
     counts = estimate_arpa_to_path(counted, str(tmp_path / "m.arpa"), order=order)
     assert evals.value == small_corpus.count()
     assert set(counts) == set(range(1, order + 1))
-    # raw, adjusted, probs, gammas, the gamma(eps) checkpoint and the
-    # per-order levels are all released after the emit
-    assert _persistent_rdds(spark) == before
+    # the caches estimate_df built (raw, adjusted) are released after the
+    # emit: no RDD cached during the call is still cached
+    assert _persistent_rdds(spark) <= before
 
 
 def test_collecting_emit_releases_caches(spark, small_corpus):
     before = _persistent_rdds(spark)
     sections = estimate_arpa_sections(small_corpus, order=2)
     assert len(sections.counts) == 2
-    assert _persistent_rdds(spark) == before
+    assert _persistent_rdds(spark) <= before
+
+
+def test_null_text_is_no_sentence_with_ansi_off(spark, small_corpus, tmp_path):
+    """With ANSI mode off ``size(NULL)`` is -1, so a NULL text explodes into
+    NULL windows; they must be dropped, not reach the kernels, and the
+    model must equal the one estimated without the NULL row."""
+    with_null = small_corpus.unionByName(spark.createDataFrame([(None,)], "text string"))
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        for order in (1, 3):
+            paths = [tmp_path / f"{order}_{k}.arpa" for k in ("null", "plain")]
+            estimate_arpa_to_path(with_null, str(paths[0]), order=order)
+            estimate_arpa_to_path(small_corpus, str(paths[1]), order=order)
+            assert paths[0].read_bytes() == paths[1].read_bytes()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)
 
 
 def test_streaming_emit_never_collects_the_model(spark, small_corpus, tmp_path, monkeypatch):

@@ -252,3 +252,118 @@ def test_filter_ablation_single_aggregation(spark):
     # exactly one shuffle node: the partial->final aggregate exchange
     # (formatted mode prints each node twice: tree + detail section)
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
+
+
+def test_lmplz_jobs_do_not_grow_with_order(spark, tmp_path):
+    """A3, A4 and A5 are one kernel each over one repartition at any order:
+    going from order 3 to order 5 adds at most a few jobs, where a
+    per-order chain of joins adds about 13 per order."""
+    from kenlm_rs_spark.builder.lmplz import estimate_arpa_to_path
+    from kenlm_rs_spark.pipeline.corpus import training_corpus
+
+    df = spark.createDataFrame([(t,) for t in training_corpus("en", 300)], "text string")
+    sc = spark.sparkContext
+    jobs = {}
+    for order in (3, 5):
+        group = f"lmplz-jobs-order-{order}"
+        sc.setJobGroup(group, group)
+        try:
+            estimate_arpa_to_path(df, str(tmp_path / f"{order}.arpa"), order=order)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[order] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[5] - jobs[3] <= 4, jobs
+
+
+def test_lmplz_bytes_do_not_depend_on_partitioning(spark, tmp_path):
+    """Each lmplz kernel assumes its key is local to one partition. Under
+    1 and 7 shuffle partitions (AQE coalescing off, so 7 stay 7) a pruned,
+    vocabulary-limited order-5 estimate writes the same bytes; a kernel
+    keyed on less than it needs splits a key and changes them."""
+    from kenlm_rs_spark.builder.lmplz import estimate_arpa_to_path
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("text")
+    top = {
+        r["ngram"]
+        for r in ts.ngram_counts(docs, 1)
+        .orderBy(F.desc("count"), F.asc("ngram")).limit(20).collect()
+    }
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    arpas = []
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for parts in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            path = tmp_path / f"parts{parts}.arpa"
+            estimate_arpa_to_path(
+                docs, str(path), order=5,
+                prune_thresholds=[0, 0, 1, 1, 1], limit_vocab=top,
+            )
+            arpas.append(path.read_bytes())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert arpas[0] == arpas[1]
+
+
+def _plan_node_ids(plan: str, node: str, needle: str) -> list[int]:
+    """Operator ids (children numbered before parents) of the ``node``
+    detail sections of a formatted plan that mention ``needle``."""
+    ids = []
+    for block in plan.split("\n\n"):
+        m = re.match(r"\((\d+)\) (\w+)", block.strip())
+        if m and m.group(2) == node and needle in block:
+            ids.append(int(m.group(1)))
+    return ids
+
+
+_CAP = 3
+# "alpha beta gamma" opens cap+1 docs: over the cap, so docs 0 and 2 share
+# nothing countable; 0/1 and 2/3 share three shingles each below it
+_CAP_TEXTS = [
+    "alpha beta gamma one two three four",
+    "alpha beta gamma one two three five",
+    "alpha beta gamma six seven eight nine",
+    "alpha beta gamma six seven eight ten",
+    "zulu yankee xray",
+]
+
+
+@pytest.mark.parametrize("kind", ["shingle", "fingerprint"])
+def test_posting_cap_applies_before_the_list(spark, kind):
+    """A key in cap+1 docs never reaches collect_list: the frequency filter
+    sits below the aggregate that builds the posting list, on the same
+    exchange (two Exchanges, as before the filter moved), and the pairs
+    equal a Python count over the keys within the cap."""
+    from kenlm_rs_spark.ops.dedup import ngram_jaccard_pairs, shingle_table
+    from kenlm_rs_spark.ops.winnow import winnow_candidate_pairs, winnow_table
+
+    boiler = "boilerplate navigation footer text repeated "
+    texts = _CAP_TEXTS if kind == "shingle" else [
+        (boiler + t if i < _CAP + 1 else t) * 2 for i, t in enumerate(_CAP_TEXTS)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    if kind == "shingle":
+        out = ngram_jaccard_pairs(df, shingle_n=3, threshold=0.0, max_shingle_freq=_CAP)
+        keys = shingle_table(df, "doc_id", "text", 3)
+    else:
+        out = winnow_candidate_pairs(df, max_fp_freq=_CAP, min_shared=1)
+        keys = winnow_table(df, "doc_id", "text")
+    p = _plan(out)  # before execution: AQE would add the final plan
+    assert len(re.findall(r"\(\d+\) Exchange", p)) == 2
+    cap_filter = _plan_node_ids(p, "Filter", "_freq")
+    lists = _plan_node_ids(p, "ObjectHashAggregate", "collect_list")
+    assert cap_filter and lists and max(cap_filter) < min(lists)
+
+    docs_of: dict = {}
+    for r in keys.collect():
+        docs_of.setdefault(r[kind], set()).add(r["doc_id"])
+    assert any(len(d) == _CAP + 1 for d in docs_of.values())
+    shared: Counter = Counter()
+    for d in docs_of.values():
+        if 2 <= len(d) <= _CAP:
+            ids = sorted(d)
+            shared.update((a, b) for i, a in enumerate(ids) for b in ids[i + 1:])
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == set(shared)
+    assert (0, 2) not in shared and (0, 1) in shared
