@@ -111,11 +111,8 @@ def _corpus_model(spark: SparkSession, sf_dir: str):
         src = os.path.join(sf_dir, "documents.parquet")
         cache = f"/tmp/kenlm_corpus_model_{_content_key(src)[:12]}.arpa"
         if not os.path.exists(cache):
-            # the driver-RAM-bounded streaming emit (one distributed sort +
-            # toLocalIterator) IS the exercised path, so the >RAM scale path
-            # is the one the flagship queries and bench continuously test;
-            # byte-identical to the collecting estimate_arpa (regression in
-            # tests/test_lmplz_prune.py)
+            # lmplz's one ARPA emit: one distributed sort + toLocalIterator,
+            # so the driver never holds the model
             estimate_arpa_to_path(
                 _docs(spark, sf_dir).select("text"), cache, order=3
             )

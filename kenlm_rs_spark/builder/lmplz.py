@@ -43,13 +43,19 @@ expression in one fixed order — (a - D)/sum, (((D1 N1 + D2 N2) + D3 N3+) +
 pruned)/sum, u + gamma * p_lower — with longs turned into doubles exactly,
 so the ARPA bytes depend on neither the plan nor the partition count.
 
+Prune marks (lmplz ``--prune``, ``--limit_vocab_file``) are set in one
+pass over the A3 output, as AdjustCounts marks them inside its one
+suffix-sorted pass (adjust_counts.cc:219-233,265-283): one aggregate sums
+every lower order's raw count and one left join on the gram attaches it.
+
 The big-data half (counting + adjustment + per-context sums) stays
 distributed. The final model is emitted as ARPA, which NGramModel.from_arpa
-then loads for scoring parity with KenLM semantics: ``estimate_arpa``
-collects it (vocabulary-sized, not corpus-sized); ``estimate_arpa_to_path``
-sorts it once over (order, gram) and streams it through the driver a
-partition at a time. Both release the caches ``estimate_df`` builds
-(its ``cached_deps``) once the model is written.
+then loads for scoring parity with KenLM semantics. There is one emit:
+``estimate_arpa_to_path`` sorts the model once over (order, gram) and
+streams it through the driver a partition at a time, rendering each record
+with ``lm.arpa.arpa_record``; ``estimate_arpa`` returns that file's text.
+The emit releases the caches ``estimate_df`` builds (its ``cached_deps``)
+once the model is written.
 
 Sentence-boundary conventions match corpus_count.cc:80-92: each sentence is
 [<s>] + tokens + [</s>]; every non-<s> position yields one window of length
@@ -59,18 +65,18 @@ text are removed first (corpus_count.cc:175-179 forbids them).
 
 from __future__ import annotations
 
-import io
 import itertools
 import math
 import os
 import shutil
+import tempfile
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..lm.arpa import ArpaSections, ProbBackoffNgram, ProbNgram, write_arpa
+from ..lm.arpa import arpa_record
 from ..ops.textstats import TOKEN_SPLIT
 
 FALLBACK_DISCOUNTS = (0.0, 0.5, 1.0, 1.5)  # lmplz --discount_fallback defaults
@@ -114,21 +120,6 @@ def raw_window_counts(df: DataFrame, text_col: str, order: int) -> DataFrame:
     )
 
 
-def _actual_counts(raw: DataFrame, n: int) -> DataFrame:
-    """Raw occurrence count of each order-n gram, reconstructed as the sum of
-    window counts whose length-n SUFFIX equals the gram — exactly the
-    ``actual_counts`` accumulation of the reference's AdjustCounts
-    (adjust_counts.cc:286-292 STEP 2: every full-stream entry adds its
-    unmarked count to all its suffixes). Each corpus position lives in
-    exactly one window row of ``raw``, so no double counting."""
-    return (
-        raw.filter(F.size("gram") >= n)
-        .withColumn("sfx", F.slice(F.col("gram"), F.size("gram") - n + 1, n))
-        .groupBy(F.col("sfx").alias("gram"))
-        .agg(F.sum("count").alias("actual"))
-    )
-
-
 def with_prune_flags(
     adjusted: DataFrame,
     raw: DataFrame,
@@ -147,50 +138,52 @@ def with_prune_flags(
     ``limit_vocab`` = lmplz ``--limit_vocab_file`` (prune_words marks,
     adjust_counts.cc:137-146,227-233): any gram containing a word OUTSIDE
     the allowed list is pruned at every order; <s>/</s>/<unk> are always
-    allowed. Composes with the count thresholds (either mark prunes)."""
-    vocab_pruned = None
+    allowed. Composes with the count thresholds (either mark prunes).
+
+    One pass flags every order: the top order reads its own count, and when
+    a lower order has a positive threshold one aggregate sums the raw
+    counts of all lower orders and one left join on ``gram`` attaches
+    them."""
+    pruned = F.lit(False)
     if limit_vocab is not None:
         allowed = sorted(set(limit_vocab) | set(RESERVED))
-        vocab_pruned = ~F.forall(F.col("gram"), lambda w: w.isin(*allowed))
-        # protect the reserved unigrams themselves (index > 2 guard)
-        vocab_pruned = vocab_pruned & ~(
-            (F.col("n") == 1) & F.element_at("gram", 1).isin(*RESERVED)
+        pruned = ~F.forall(F.col("gram"), lambda w: w.isin(*allowed))
+    if prune_thresholds and any(t > 0 for t in prune_thresholds):
+        if len(prune_thresholds) != order:
+            raise ValueError(f"need {order} thresholds, got {prune_thresholds}")
+        if any(
+            prune_thresholds[i] > prune_thresholds[i + 1] for i in range(order - 1)
+        ):
+            raise ValueError(f"prune thresholds must be non-decreasing: {prune_thresholds}")
+        threshold = F.element_at(
+            F.array(*(F.lit(int(t)) for t in prune_thresholds)), F.col("n")
         )
-    if not prune_thresholds or all(t <= 0 for t in prune_thresholds):
-        return adjusted.withColumn(
-            "pruned",
-            vocab_pruned if vocab_pruned is not None else F.lit(False),
-        )
-    if len(prune_thresholds) != order:
-        raise ValueError(f"need {order} thresholds, got {prune_thresholds}")
-    if any(
-        prune_thresholds[i] > prune_thresholds[i + 1] for i in range(order - 1)
-    ):
-        raise ValueError(f"prune thresholds must be non-decreasing: {prune_thresholds}")
-    parts = []
-    for n in range(1, order + 1):
-        t = int(prune_thresholds[n - 1])
-        level = adjusted.filter(F.col("n") == n)
-        if t <= 0:
-            parts.append(level.withColumn("pruned", F.lit(False)))
-            continue
-        if n == order:
-            # top order: the adjusted count IS the raw window count
-            # (CollapseStream marks entries by their own count) — no join
-            parts.append(level.withColumn("pruned", F.col("count") <= t))
-            continue
-        act = _actual_counts(raw, n)
-        level = level.join(act, "gram", "left")
-        pruned = F.coalesce(F.col("actual"), F.lit(0)) <= t
-        if n == 1:
-            pruned = pruned & ~F.element_at("gram", 1).isin(*RESERVED)
-        parts.append(level.withColumn("pruned", pruned).drop("actual"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if vocab_pruned is not None:
-        out = out.withColumn("pruned", F.col("pruned") | vocab_pruned)
-    return out
+        # top order: the adjusted count IS the raw window count
+        # (CollapseStream marks entries by their own count)
+        actual = F.col("count")
+        if any(t > 0 for t in prune_thresholds[:-1]):
+            # a lower order's raw count is the sum of the window counts
+            # whose suffix is the gram (adjust_counts.cc:286-292 STEP 2:
+            # every entry adds its count to all its suffixes); each corpus
+            # position is one window of ``raw``, so one explode into the
+            # suffixes of length 1..N-1 and one sum give every lower order
+            suffixes = F.transform(
+                F.sequence(F.lit(1), F.least(F.size("gram"), F.lit(order - 1))),
+                lambda k: F.slice("gram", -k, k),
+            )
+            sums = (
+                raw.select(F.explode(suffixes).alias("gram"), "count")
+                .groupBy("gram")
+                .agg(F.sum("count").alias("actual"))
+            )
+            adjusted = adjusted.join(sums, "gram", "left")
+            actual = F.when(F.col("n") == order, actual).otherwise(
+                F.coalesce(F.col("actual"), F.lit(0))
+            )
+        pruned = pruned | ((threshold > 0) & (actual <= threshold))
+    # the reserved unigrams are never pruned (``if(*full->begin() > 2)``)
+    reserved = (F.col("n") == 1) & F.element_at("gram", 1).isin(*RESERVED)
+    return adjusted.withColumn("pruned", pruned & ~reserved).drop("actual")
 
 
 def _pylist(col: pa.Array) -> list:
@@ -500,7 +493,9 @@ def estimate_df(
     context). After the cached A1 counts, A3, A4 and A5 are one Arrow
     kernel each over a hash repartition — by last word, by (n, context),
     by last word: the reference's suffix, context and suffix sort orders —
-    so the job count does not grow with the order. The driver collects
+    and the prune marks are one pass over the A3 output (one aggregate and
+    one join when a lower order is pruned), so the job count does not grow
+    with the order, pruned or not. The driver collects
     only the count-of-counts rows and the 1-row unigram sums; nothing
     corpus- or model-sized. A kernel streams its sorted partition one key
     at a time, so a Python worker holds the rows of its largest key — the
@@ -519,24 +514,16 @@ def estimate_df(
     # unseen words; requires unigram interpolation
     if vocab_pad and not interpolate_unigrams:
         raise ValueError("--vocab_pad requires --interpolate_unigrams")
-    # A1 runs once: A3, the <s> unigram and the prune flags all read raw;
+    # A1 runs once: A3, the <s> unigram and the prune sums all read raw;
     # uncached, each reference re-scans and re-tokenizes the corpus
     raw = raw_window_counts(df, text_col, order).cache()
     counts = adjusted_counts(raw, order)
-    # count thresholds split the A3 output into one branch per order, and
-    # Spark re-runs the opaque kernel under each branch: cache it so A3 runs
-    # once, and release it once the flagged cache is filled
-    split = bool(prune_thresholds) and any(t > 0 for t in prune_thresholds)
-    if split:
-        counts = counts.cache()
     adj = with_prune_flags(counts, raw, order, prune_thresholds, limit_vocab).cache()
     # uniform base 1/(vocab-1) (interpolate.hh:21-23). Vocabulary size
     # counts ALL types (pre-prune adjusted unigrams excl <s>), matching the
     # reference's corpus-count vocab size; ONE aggregation job yields both
     # the count-of-counts and the vocab size
     discounts, vocab_rows = _discount_and_vocab_stats(adj, order)
-    if split:
-        counts.unpersist()
     table, g_eps = _initial_table(adj, discounts, order)
     g_eps = 0.0 if g_eps is None else g_eps
     uniform = 1.0 / max(vocab_pad, vocab_rows + 1, 1)  # + <unk>
@@ -565,73 +552,15 @@ def estimate_df(
     return out
 
 
-def estimate_arpa_sections(
-    df: DataFrame,
-    text_col: str = "text",
-    order: int = 3,
-    prune_thresholds: list[int] | None = None,
-    limit_vocab: set[str] | list[str] | None = None,
-    interpolate_unigrams: bool = True,
-    vocab_pad: int = 0,
-) -> ArpaSections:
-    """Estimation -> ARPA sections (collects the final model-sized table;
-    with pruning the collected table is vocabulary-shaped even at corpus
-    scale — see estimate_df)."""
-    model = estimate_df(
-        df, text_col, order, prune_thresholds, limit_vocab,
-        interpolate_unigrams, vocab_pad,
-    )
-    try:
-        rows = model.collect()
-    finally:
-        _unpersist_deps(model)
-    by_order: dict[int, list] = {}
-    for r in rows:
-        by_order.setdefault(r["n"], []).append(
-            (tuple(r["gram"]), r["p"], r["gamma"])
-        )
-
-    sections = ArpaSections(counts=[])
-    backoff_orders: list[list[ProbBackoffNgram]] = []
-    top_records: list[ProbNgram] = []
-    for n in range(1, order + 1):
-        recs = sorted(by_order.get(n, []))
-        sections.counts.append(len(recs))
-        if n < order:
-            out = []
-            for g, p, gamma in recs:
-                if g == ("<s>",):
-                    lp = -99.0  # never predicted (interpolate.hh:21-23)
-                else:
-                    lp = math.log10(p) if p and p > 0 else -99.0
-                log_bo = (
-                    math.log10(gamma) if gamma is not None and gamma > 0 else -0.0
-                )
-                out.append(ProbBackoffNgram(lp, g, log_bo))
-            backoff_orders.append(out)
-        else:
-            top_records = [
-                ProbNgram(math.log10(p) if p and p > 0 else -99.0, g)
-                for g, p, _ in recs
-            ]
-    sections.backoffs = backoff_orders
-    sections.no_backoff = top_records
-    return sections
-
-
 def _arpa_line(g: tuple, p, gamma, n: int, order: int) -> str:
-    """One ARPA record, byte-identical to estimate_arpa_sections+write_arpa
-    (same -99/<s> sentinels, same %g rendering, same backoff-omission rule)."""
-    if n < order:
-        lp = -99.0 if g == ("<s>",) else (math.log10(p) if p and p > 0 else -99.0)
-        log_bo = math.log10(gamma) if gamma is not None and gamma > 0 else -0.0
-        if log_bo == 0.0 and not math.copysign(1.0, log_bo) < 0:
-            return f"{lp:g}\t{' '.join(g)}\t0\n"
-        if log_bo == 0.0:
-            return f"{lp:g}\t{' '.join(g)}\n"
-        return f"{lp:g}\t{' '.join(g)}\t{log_bo:g}\n"
-    lp = math.log10(p) if p and p > 0 else -99.0
-    return f"{lp:g}\t{' '.join(g)}\n"
+    """One model row as an ARPA record: p -> log10 p, -99 for a zero p and
+    for <s>, which is never predicted (interpolate.hh:21-23); below the top
+    order gamma -> log10 backoff, -0.0 (omitted) when the gram is never a
+    context."""
+    lp = math.log10(p) if p and p > 0 and g != ("<s>",) else -99.0
+    if n == order:
+        return arpa_record(lp, g, None)
+    return arpa_record(lp, g, math.log10(gamma) if gamma is not None and gamma > 0 else -0.0)
 
 
 def _unpersist_deps(model: DataFrame) -> None:
@@ -659,17 +588,15 @@ def estimate_arpa_to_path(
     interpolate_unigrams: bool = True,
     vocab_pad: int = 0,
 ) -> dict[int, int]:
-    """Driver-memory-bounded ARPA emit for models larger than driver RAM:
-    the model is sorted DISTRIBUTEDLY, once, over ``(n, gram)`` (Spark
-    range-partitioned sort) and streamed through the driver one partition
-    at a time with ``toLocalIterator`` — nothing model-sized is ever
-    collect()ed. The per-order counts are taken while streaming and the
-    section headers written as ``n`` advances, into a body file next to
-    ``path``; the ``\\data\\`` header is then written from those counts and
-    the body appended after it. Output is byte-identical to
-    ``estimate_arpa`` (regression-tested). Returns the per-order counts
-    (every order 1..``order``, zero for an empty one). Atomic: tmp +
-    rename."""
+    """The ARPA emit, bounded in driver memory: the model is sorted
+    DISTRIBUTEDLY, once, over ``(n, gram)`` (Spark range-partitioned sort)
+    and streamed through the driver one partition at a time with
+    ``toLocalIterator`` — nothing model-sized is ever collect()ed. The
+    per-order counts are taken while streaming and the section headers
+    written as ``n`` advances, into a body file next to ``path``; the
+    ``\\data\\`` header is then written from those counts and the body
+    appended after it. Returns the per-order counts (every order
+    1..``order``, zero for an empty one). Atomic: tmp + rename."""
     model = estimate_df(
         df, text_col, order, prune_thresholds, limit_vocab,
         interpolate_unigrams, vocab_pad,
@@ -712,11 +639,13 @@ def estimate_arpa(
     interpolate_unigrams: bool = True,
     vocab_pad: int = 0,
 ) -> str:
-    """Estimate and render the ARPA text."""
-    sections = estimate_arpa_sections(
-        df, text_col, order, prune_thresholds, limit_vocab,
-        interpolate_unigrams, vocab_pad,
-    )
-    buf = io.StringIO()
-    write_arpa(sections, buf)
-    return buf.getvalue()
+    """Estimate and return the ARPA text, written through
+    ``estimate_arpa_to_path`` into a temporary directory."""
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "model.arpa")
+        estimate_arpa_to_path(
+            df, path, text_col, order, prune_thresholds, limit_vocab,
+            interpolate_unigrams, vocab_pad,
+        )
+        with open(path) as f:
+            return f.read()

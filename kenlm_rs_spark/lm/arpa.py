@@ -192,6 +192,16 @@ def read_arpa(path_or_file) -> ArpaSections:
     return sections
 
 
+def arpa_record(log_prob: float, ngram: tuple[str, ...], backoff: float | None) -> str:
+    """One ARPA line (print.cc shape): ``%g`` numbers, tab-separated. The
+    backoff field is omitted when ``backoff`` is None (the highest order)
+    or -0.0 (kNoExtensionBackoff); +0.0 prints as ``0``."""
+    head = f"{log_prob:g}\t{' '.join(ngram)}"
+    if backoff is None or (backoff == 0.0 and math.copysign(1.0, backoff) < 0):
+        return head + "\n"
+    return f"{head}\t{backoff:g}\n"
+
+
 def write_arpa(sections: ArpaSections, out: IO[str]) -> None:
     """Print a model back to ARPA text (reference sink S8,
     /root/reference/src/cxx/lm/common/print.cc shape)."""
@@ -203,14 +213,9 @@ def write_arpa(sections: ArpaSections, out: IO[str]) -> None:
         out.write(f"\\{o}-grams:\n")
         if o == sections.order:
             for r in sections.no_backoff:
-                out.write(f"{r.log_prob:g}\t{' '.join(r.ngram)}\n")
+                out.write(arpa_record(r.log_prob, r.ngram, None))
         else:
             for r in sections.backoffs[o - 1]:
-                if r.backoff == 0.0 and not math.copysign(1.0, r.backoff) < 0:
-                    out.write(f"{r.log_prob:g}\t{' '.join(r.ngram)}\t0\n")
-                elif r.backoff == 0.0:
-                    out.write(f"{r.log_prob:g}\t{' '.join(r.ngram)}\n")
-                else:
-                    out.write(f"{r.log_prob:g}\t{' '.join(r.ngram)}\t{r.backoff:g}\n")
+                out.write(arpa_record(r.log_prob, r.ngram, r.backoff))
         out.write("\n")
     out.write("\\end\\\n")

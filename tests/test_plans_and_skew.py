@@ -255,24 +255,29 @@ def test_filter_ablation_single_aggregation(spark):
 
 
 def test_lmplz_jobs_do_not_grow_with_order(spark, tmp_path):
-    """A3, A4 and A5 are one kernel each over one repartition at any order:
-    going from order 3 to order 5 adds at most a few jobs, where a
-    per-order chain of joins adds about 13 per order."""
+    """A3, A4 and A5 are one kernel each over one repartition at any order,
+    and the prune marks one pass over the A3 output: going from order 3 to
+    order 5 adds at most a few jobs, pruned or not, where a per-order chain
+    of joins adds about 13 per order (unpruned) or 3 (pruned)."""
     from kenlm_rs_spark.builder.lmplz import estimate_arpa_to_path
     from kenlm_rs_spark.pipeline.corpus import training_corpus
 
     df = spark.createDataFrame([(t,) for t in training_corpus("en", 300)], "text string")
     sc = spark.sparkContext
-    jobs = {}
-    for order in (3, 5):
-        group = f"lmplz-jobs-order-{order}"
-        sc.setJobGroup(group, group)
-        try:
-            estimate_arpa_to_path(df, str(tmp_path / f"{order}.arpa"), order=order)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[order] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs[5] - jobs[3] <= 4, jobs
+    for pruned in (False, True):
+        jobs = {}
+        for order in (3, 5):
+            group = f"lmplz-jobs-order-{order}-pruned-{pruned}"
+            sc.setJobGroup(group, group)
+            try:
+                estimate_arpa_to_path(
+                    df, str(tmp_path / f"{order}.arpa"), order=order,
+                    prune_thresholds=[0] + [1] * (order - 1) if pruned else None,
+                )
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[order] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs[5] - jobs[3] <= 4, (pruned, jobs)
 
 
 def test_lmplz_bytes_do_not_depend_on_partitioning(spark, tmp_path):
