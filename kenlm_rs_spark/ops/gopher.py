@@ -14,6 +14,8 @@ All features are pure Spark SQL expressions (whole-stage codegen, no UDFs):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,23 +188,27 @@ def gopher_repetition(
     return out.select(*sel)
 
 
+# the Gopher rule chain, (drop_reason, feature column, op, limit) in rule
+# order: the first failing rule names the drop
+GOPHER_RULES = (
+    ("too_few_words", "g_n_words", operator.lt, MIN_WORDS),
+    ("too_many_words", "g_n_words", operator.gt, MAX_WORDS),
+    ("mean_word_len_low", "g_mean_word_len", operator.lt, MIN_MEAN_WORD_LEN),
+    ("mean_word_len_high", "g_mean_word_len", operator.gt, MAX_MEAN_WORD_LEN),
+    ("symbol_ratio", "g_symbol_word_ratio", operator.gt, MAX_SYMBOL_WORD_RATIO),
+    ("bullet_lines", "g_bullet_line_frac", operator.gt, MAX_BULLET_LINE_FRAC),
+    ("ellipsis_lines", "g_ellipsis_line_frac", operator.gt, MAX_ELLIPSIS_LINE_FRAC),
+    ("non_alpha_words", "g_alpha_word_frac", operator.lt, MIN_ALPHA_WORD_FRAC),
+    ("stopwords", "g_n_stopwords", operator.lt, MIN_STOPWORDS),
+)
+
+
 def gopher_decide(df: DataFrame) -> DataFrame:
     """Attach gopher_keep + gopher_drop_reason (first failing rule, fixed
     Gopher order). Input must carry the gopher_features columns."""
-    reasons = [
-        (F.col("g_n_words") < MIN_WORDS, "too_few_words"),
-        (F.col("g_n_words") > MAX_WORDS, "too_many_words"),
-        (F.col("g_mean_word_len") < MIN_MEAN_WORD_LEN, "mean_word_len_low"),
-        (F.col("g_mean_word_len") > MAX_MEAN_WORD_LEN, "mean_word_len_high"),
-        (F.col("g_symbol_word_ratio") > MAX_SYMBOL_WORD_RATIO, "symbol_ratio"),
-        (F.col("g_bullet_line_frac") > MAX_BULLET_LINE_FRAC, "bullet_lines"),
-        (F.col("g_ellipsis_line_frac") > MAX_ELLIPSIS_LINE_FRAC, "ellipsis_lines"),
-        (F.col("g_alpha_word_frac") < MIN_ALPHA_WORD_FRAC, "non_alpha_words"),
-        (F.col("g_n_stopwords") < MIN_STOPWORDS, "stopwords"),
-    ]
     reason = F.lit(None).cast("string")
-    for cond, name in reversed(reasons):
-        reason = F.when(cond, name).otherwise(reason)
+    for name, col, op, limit in reversed(GOPHER_RULES):
+        reason = F.when(op(F.col(col), limit), name).otherwise(reason)
     return df.withColumn("gopher_drop_reason", reason).withColumn(
         "gopher_keep", F.col("gopher_drop_reason").isNull()
     )

@@ -4,15 +4,25 @@ Scale design (north_rule):
 - **Skew**: work is split into ``n_chunks`` by ``xxhash64(url) % n_chunks``.
   Hashing the full url (not the domain) spreads mega-domains uniformly — the
   salt is the path component — so no chunk is hot regardless of the Zipf
-  domain distribution. Within a chunk we ``repartition(p, xxhash64(url, salt))``
-  before the Python-UDF stage so Arrow batches are balanced too.
+  domain distribution. Pages are ``repartition(p, xxhash64(url))``-ed
+  before the Python-UDF stages so Arrow batches are balanced too.
 - **Resumability**: each chunk commits atomically — parquet output under
   ``out/chunk=K/`` plus a ``_chunk_K.json`` marker carrying row counts,
-  drop-reason histogram, scrub hits, and component versions (lineage). A
-  restart skips chunks whose marker exists and whose counts verify.
-- **One pass**: extraction -> langid -> scrub -> heuristics -> per-language
-  KenLM perplexity -> buckets -> keep/drop, all in a single plan per chunk;
-  only langid + LM scoring cross into Python (Arrow-vectorized).
+  drop-reason histogram, scrub hits, a file manifest and component versions
+  (lineage). A restart skips chunks whose marker exists and whose counts
+  verify.
+- **One scoring pass**: extraction -> scrub -> heuristics -> langid +
+  per-language KenLM perplexity (one fused Arrow stage) -> buckets ->
+  keep/drop. When the threshold pass reads every page (sample fraction 1.0,
+  the auto value up to ``THRESHOLD_SAMPLE_TARGET`` pages) the scored pages
+  are persisted once, the thresholds come from them, and each chunk is a
+  filter over that frame: every page is extracted, scrubbed and scored
+  once. A sampled threshold pass, or a resume that reads
+  ``_thresholds.json``, scores each chunk in its own plan with the chunk
+  filter below extraction.
+- **Markers from the write**: each chunk's counts are a
+  ``DataFrame.observe`` on the written rows, so the marker costs no job of
+  its own; the observation sits above every Exchange of the write.
 
 Launch:  spark-submit --py-files kenlm_rs_spark.zip -m kenlm_rs_spark.pipeline.filter_job
 """
@@ -24,7 +34,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..lm.model import NGramModel
@@ -32,7 +42,14 @@ from ..ops.urls import canonical_url, registered_domain
 from ..spark.scoring import with_langid_scores
 from .extract import EXTRACTOR_VERSION, with_extracted_text
 from .langid import default_langid
-from .quality import RULES_VERSION, decide, ppl_thresholds, rule_columns, with_buckets
+from .quality import (
+    DECIDE_RULES,
+    RULES_VERSION,
+    decide,
+    ppl_thresholds,
+    rule_columns,
+    with_buckets,
+)
 from .scrub import scrub_text
 
 JOB_VERSION = 2
@@ -56,6 +73,21 @@ OUTPUT_COLUMNS = [
     "keep",
     "drop_reason",
 ]
+
+# drop reasons of the opt-in stages; a Gopher drop reads GOPHER_PREFIX + rule
+GOPHER_PREFIX = "gopher:"
+URL_DUPLICATE = "url_duplicate"
+BLOCKED_DOMAIN = "blocked_domain"
+CLASSIFIER_LOW = "classifier_low"
+CONTAMINATED = "contaminated"
+RESAMPLED_OUT = "resampled_out"
+
+# per-page flag carried to the write: the scrub changed the page's text
+SCRUB_CHANGED = "_scrub_changed"
+
+# what the chunk body reads of a scored page: the output columns, the
+# decision's rule features and the scrub flag
+SCORED_COLUMNS = {*OUTPUT_COLUMNS, *(c for _, c, _, _ in DECIDE_RULES), SCRUB_CHANGED}
 
 
 def load_language_models(spark: SparkSession, lm_dir: str) -> dict:
@@ -99,6 +131,24 @@ def run_filter_job(
     / ``sample_for_thresholds=1.0`` only where engine-portable determinism
     matters more than memory (the DuckDB-oracle gate query does).
 
+    Pages are scored once. When the threshold fraction is 1.0 — the auto
+    value up to ``THRESHOLD_SAMPLE_TARGET`` pages, or an explicit
+    ``sample_for_thresholds=1.0`` at any input size — the job persists
+    every scored page (memory and disk: url, warc_ts, text_scrubbed, the
+    langid and LM columns, the rule features ``decide`` reads and the scrub
+    flag; no html or raw text), computes the thresholds from it and cuts
+    the chunks from it; the frame is released when the job returns or
+    fails. Otherwise each chunk scores its own pages after the sampled
+    threshold pass.
+
+    Each chunk is one parquet write. Its marker (``_chunk_K.json``) holds
+    ``docs``, ``kept``, ``by_reason`` (dropped rows per drop reason),
+    ``scrub_docs_changed`` (pages whose text the scrub changed, over every
+    page that reached the scrub), the file ``manifest``, component
+    ``versions``, the opt-in ``stages`` and ``wall_sec``. The counts are
+    observed on the rows as they are written; a dropped row whose reason is
+    not one the rule tables name fails the job before its marker is written.
+
     Opt-in stages (all OFF by default so the frozen CCNet keep/drop
     semantics are untouched; each is recorded in the chunk lineage):
     - ``gopher=True``: apply the Gopher rule set (ops/gopher.py) after the
@@ -113,9 +163,9 @@ def run_filter_job(
       dropped docs get drop_reason 'contaminated'.
     - ``blocklist_domains=<DataFrame with a domain column>``: EARLY-drop
       docs whose registered domain is blocklisted (broadcast join on the
-      url column only) — dropped docs never enter extraction or scoring,
-      the cheapest-filter-first shape at 10^12 docs; drop_reason
-      'blocked_domain'.
+      url column only) — on the per-chunk plan dropped docs never enter
+      extraction or scoring, the cheapest-filter-first shape at 10^12 docs;
+      drop_reason 'blocked_domain'.
     - ``url_dedup=True``: EARLY-drop crawl duplicates of the same
       canonical URL (ops/urls.canonical_url), earliest (warc_ts, url)
       wins; drop_reason 'url_duplicate'. Chunking switches to the
@@ -124,296 +174,348 @@ def run_filter_job(
     - ``classifier_prefilter=<logit threshold>``: drop docs whose frozen
       linear-classifier logit (pipeline/classifier.py, pure codegen over
       the heuristic features) is below the threshold BEFORE the Arrow
-      langid+scoring stage — the CCNet-paper cheap prefilter; dropped docs
-      get drop_reason 'classifier_low' and never cross into Python. The
-      scrubbed chunk is cached so the split does not re-extract."""
+      langid+scoring stage of the per-chunk plan — the CCNet-paper cheap
+      prefilter; dropped docs get drop_reason 'classifier_low' and carry no
+      scoring columns. The per-chunk plan caches the scrubbed chunk so the
+      split does not re-extract.
+
+    Early-dropped rows carry null scoring columns on either plan."""
     os.makedirs(output_dir, exist_ok=True)
     partitions = partitions_per_chunk or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     bc_langid = spark.sparkContext.broadcast(default_langid())
     bc_models = load_language_models(spark, lm_dir)
+    reasons = [name for name, *_ in DECIDE_RULES]
+    if gopher:
+        from ..ops.gopher import GOPHER_RULES
 
-    # ---- frozen thresholds (computed once, persisted for resume/lineage)
-    thr_path = os.path.join(output_dir, "_thresholds.json")
-    if os.path.exists(thr_path):
-        thresholds = {k: tuple(v) for k, v in json.load(open(thr_path)).items()}
-    else:
-        frac = sample_for_thresholds
-        if frac is None:
-            # auto: aim for THRESHOLD_SAMPLE_TARGET rows (cheap count — the
-            # scan is column-pruned and runs once, never on resume)
-            frac = min(1.0, THRESHOLD_SAMPLE_TARGET / max(pages.count(), 1))
-        sample = pages
-        if frac < 1.0:
-            sample = pages.sample(frac, seed=42)
-        sample = with_extracted_text(sample)
-        # thresholds must be computed over the SAME text the chunk loop
-        # scores (text_scrubbed) — scrub placeholders are OOV, so an
-        # unscrubbed threshold distribution would bias the buckets
-        sample = sample.withColumn("text_scrubbed", scrub_text(F.col("text")))
-        sample = with_langid_scores(sample, bc_langid, bc_models)
-        thresholds = ppl_thresholds(
-            sample, lang_col="lang_pred", ppl_col="ppl",
-            exact=exact_thresholds, rel_err=1e-4,
-        )
-        _write_json_atomic(
-            thr_path,
-            thresholds,
-        )
-        _write_json_atomic(
-            os.path.join(output_dir, "_thresholds_lineage.json"),
-            {"exact": exact_thresholds, "sample_fraction": frac},
-        )
+        reasons += [GOPHER_PREFIX + name for name, *_ in GOPHER_RULES]
+    for stage, name in (
+        (decontaminate_benchmark is not None, CONTAMINATED),
+        (resample_weights, RESAMPLED_OUT),
+        (blocklist_domains is not None, BLOCKED_DOMAIN),
+        (url_dedup, URL_DUPLICATE),
+        (classifier_prefilter is not None, CLASSIFIER_LOW),
+    ):
+        if stage:
+            reasons.append(name)
 
-    totals = {"docs": 0, "kept": 0, "scrub_docs_changed": 0, "by_reason": {}}
-    t_start = time.time()
-    for k in range(n_chunks):
-        marker = os.path.join(output_dir, f"_chunk_{k}.json")
-        path = os.path.join(output_dir, f"chunk={k}")
-        if os.path.exists(marker):
-            # markers are written atomically (tmp + rename) AFTER the chunk
-            # parquet commit, but verify anyway: a marker whose doc count
-            # does not match what is on disk means a corrupt resume state —
-            # recompute the chunk rather than trust it. Verification reads
-            # parquet FOOTERS only (no Spark job): total footer rows must
-            # equal the marker's doc count, and when the marker carries a
-            # manifest the file inventory must match it too.
-            m = json.load(open(marker))
+    # the persisted scored pages, when the threshold pass read every page
+    scored: DataFrame | None = None
+    try:
+        # ---- frozen thresholds (computed once, persisted for resume/lineage)
+        thr_path = os.path.join(output_dir, "_thresholds.json")
+        if os.path.exists(thr_path):
+            thresholds = {k: tuple(v) for k, v in json.load(open(thr_path)).items()}
+        else:
+            frac = sample_for_thresholds
+            if frac is None:
+                # auto: aim for THRESHOLD_SAMPLE_TARGET rows (cheap count —
+                # the scan is column-pruned and runs once, never on resume)
+                frac = min(1.0, THRESHOLD_SAMPLE_TARGET / max(pages.count(), 1))
+            # fraction= by keyword: PySpark reads sample(frac, seed=42) as
+            # sample(withReplacement=frac) and draws a random seed instead
+            sample = pages if frac >= 1.0 else pages.sample(fraction=frac, seed=42)
+            # thresholds must be computed over the SAME text the chunks
+            # score (text_scrubbed) — scrub placeholders are OOV, so an
+            # unscrubbed threshold distribution would bias the buckets
+            sample = with_langid_scores(
+                _prepared(sample, partitions), bc_langid, bc_models
+            )
+            if frac >= 1.0:
+                # every page is scored here: keep the rows the chunks read
+                scored = sample = sample.select(
+                    *[c for c in sample.columns if c in SCORED_COLUMNS]
+                ).persist()
+            thresholds = ppl_thresholds(
+                sample, lang_col="lang_pred", ppl_col="ppl",
+                exact=exact_thresholds, rel_err=1e-4,
+            )
+            _write_json_atomic(thr_path, thresholds)
+            _write_json_atomic(
+                os.path.join(output_dir, "_thresholds_lineage.json"),
+                {"exact": exact_thresholds, "sample_fraction": frac},
+            )
+
+        totals = {"docs": 0, "kept": 0, "scrub_docs_changed": 0, "by_reason": {}}
+        t_start = time.time()
+        for k in range(n_chunks):
+            marker = os.path.join(output_dir, f"_chunk_{k}.json")
+            path = os.path.join(output_dir, f"chunk={k}")
+            if os.path.exists(marker):
+                # markers are written atomically (tmp + rename) AFTER the
+                # chunk parquet commit, but verify anyway: a marker whose doc
+                # count does not match what is on disk means a corrupt resume
+                # state — recompute the chunk rather than trust it.
+                # Verification reads parquet FOOTERS only (no Spark job):
+                # total footer rows must equal the marker's doc count, and
+                # when the marker carries a manifest the file inventory must
+                # match it too.
+                m = json.load(open(marker))
+                try:
+                    on_disk = _parquet_manifest(path)
+                    n_written = sum(f["rows"] for f in on_disk)
+                except Exception:
+                    on_disk, n_written = None, -1
+                manifest_ok = True
+                if m.get("manifest") is not None:
+                    manifest_ok = on_disk == m["manifest"]
+                if n_written == m.get("docs") and manifest_ok:
+                    _merge(totals, m)
+                    continue
+                os.remove(marker)
+            out, caches = _chunk_rows(
+                pages if scored is None else scored,
+                scored is not None, k, n_chunks, partitions, thresholds,
+                bc_langid, bc_models, gopher, resample_weights,
+                decontaminate_benchmark, blocklist_domains, url_dedup,
+                classifier_prefilter,
+            )
+            obs = Observation()
+            drop, reason = ~F.col("keep"), F.col("drop_reason")
+            out = out.observe(
+                obs,
+                F.count(F.lit(1)).alias("docs"),
+                F.count_if(F.col("keep")).alias("kept"),
+                F.count_if(F.col(SCRUB_CHANGED)).alias("scrub_docs_changed"),
+                F.count_if(
+                    drop & ~F.coalesce(reason.isin(reasons), F.lit(False))
+                ).alias("_other"),
+                *[F.count_if(drop & (reason == r)).alias(r) for r in reasons],
+            ).drop(SCRUB_CHANGED)
             try:
-                on_disk = _parquet_manifest(path)
-                n_written = sum(f["rows"] for f in on_disk)
-            except Exception:
-                on_disk, n_written = None, -1
-            manifest_ok = True
-            if m.get("manifest") is not None:
-                manifest_ok = on_disk == m["manifest"]
-            if n_written == m.get("docs") and manifest_ok:
-                _merge(totals, m)
-                continue
-            os.remove(marker)
-        # with url_dedup, chunk on the CANONICAL url's hash so every
-        # duplicate family is confined to one chunk (the per-chunk first-
-        # occurrence groupBy is then globally correct)
-        chunk_key = (
-            canonical_url(F.col("url")) if url_dedup else F.col("url")
-        )
-        chunk = pages.filter(
-            F.pmod(F.xxhash64(chunk_key), F.lit(n_chunks)) == k
-        )
-
-        # ---- EARLY drops on the url column only: blocked domains and
-        # canonical-URL crawl duplicates never enter extraction/scoring
-        # (cheapest-filter-first; at 10^12 docs these are the highest-
-        # volume drops and the extraction+Arrow stages are the cost)
-        early = None
-        if blocklist_domains is not None or url_dedup:
-            reason = F.lit(None).cast("string")
-            if url_dedup:
-                chunk = chunk.withColumn(
-                    "_canon_url", canonical_url(F.col("url"))
+                out.write.mode("overwrite").parquet(path)
+            finally:
+                for c in caches:
+                    c.unpersist()
+            counts = obs.get
+            if counts["_other"]:
+                raise RuntimeError(
+                    f"chunk {k}: {counts['_other']} dropped rows carry a "
+                    f"drop_reason outside {reasons}"
                 )
-                first = chunk.groupBy("_canon_url").agg(
-                    F.min(
-                        F.struct(
-                            F.col("warc_ts").alias("ts"), F.col("url").alias("u")
-                        )
-                    ).alias("_first")
-                )
-                chunk = chunk.join(first, "_canon_url")
-                reason = F.when(
-                    ~(
-                        (F.col("warc_ts") == F.col("_first.ts"))
-                        & (F.col("url") == F.col("_first.u"))
-                    ),
-                    F.lit("url_duplicate"),
-                ).otherwise(reason)
-            if blocklist_domains is not None:
-                bl = F.broadcast(
-                    blocklist_domains.select(
-                        F.lower(F.col("domain")).alias("_bl_domain")
-                    ).distinct()
-                )
-                # psl=True: public-suffix-aware matching, so a blocklist
-                # entry 'badsite.co.uk' matches exactly that site and can
-                # never block the whole .co.uk registry (ADVICE r4)
-                chunk = chunk.join(
-                    bl,
-                    registered_domain(F.col("url"), psl=True)
-                    == F.col("_bl_domain"),
-                    "left",
-                )
-                # blocklist outranks url_duplicate (a blocked dup reads
-                # 'blocked_domain' — the reason a human acts on)
-                reason = F.when(
-                    F.col("_bl_domain").isNotNull(), F.lit("blocked_domain")
-                ).otherwise(reason)
-            chunk = chunk.withColumn("_early_drop", reason)
-            for c in ("_canon_url", "_first", "_bl_domain"):
-                if c in chunk.columns:
-                    chunk = chunk.drop(c)
-            early = (
-                chunk.filter(F.col("_early_drop").isNotNull())
-                .select(
-                    "url",
-                    "warc_ts",
-                    F.lit(False).alias("keep"),
-                    F.col("_early_drop").alias("drop_reason"),
-                )
-            )
-            chunk = chunk.filter(F.col("_early_drop").isNull()).drop("_early_drop")
-        chunk = with_extracted_text(chunk)
-        chunk = chunk.repartition(partitions, F.xxhash64("url"))
-        chunk = chunk.withColumn("text_scrubbed", scrub_text(F.col("text")))
-        chunk = rule_columns(chunk, text_col="text_scrubbed")
-        caches: list[DataFrame] = []
-        early_clf = None
-        if classifier_prefilter is not None:
-            from .classifier import classifier_score_col
-
-            # cache the extracted+scrubbed rows: both split branches read
-            # them, and without the cache each branch re-runs extraction
-            chunk = chunk.cache()
-            caches.append(chunk)
-            z = classifier_score_col(F.col("text_scrubbed"))
-            chunk = chunk.withColumn("_clf_z", z)
-            early_clf = chunk.filter(
-                F.col("_clf_z") < classifier_prefilter
-            ).select(
-                "url",
-                "warc_ts",
-                "text_scrubbed",
-                F.lit(False).alias("keep"),
-                F.lit("classifier_low").alias("drop_reason"),
-            )
-            chunk = chunk.filter(F.col("_clf_z") >= classifier_prefilter).drop(
-                "_clf_z"
-            )
-        # langid + per-language scoring FUSED into one ArrowEvalPython stage
-        chunk = with_langid_scores(chunk, bc_langid, bc_models)
-        chunk = with_buckets(chunk, thresholds, lang_col="lang_pred", ppl_col="ppl")
-        chunk = decide(chunk)
-        extra_cols: list[str] = []
-        if gopher:
-            from ..ops.gopher import gopher_decide, gopher_features
-
-            chunk = gopher_decide(gopher_features(chunk, text_col="text_scrubbed"))
-            chunk = chunk.withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(
-                        ~F.col("gopher_keep"),
-                        F.concat(F.lit("gopher:"), F.col("gopher_drop_reason")),
-                    ),
-                ),
-            ).withColumn("keep", F.col("drop_reason").isNull())
-            extra_cols.append("gopher_drop_reason")
-        if decontaminate_benchmark is not None:
-            from ..ops.decontam import contamination_flags
-
-            # the flags join is self-referencing: without a cache the
-            # extract+scrub subtree executes once per join side (ADVICE r3).
-            # Drop the heavy source columns (html etc.) and cache the
-            # decision-sized rows so the chunk plan runs exactly once.
-            needed = set(OUTPUT_COLUMNS + extra_cols)
-            chunk = chunk.select(*[c for c in chunk.columns if c in needed])
-            chunk = chunk.cache()
-            caches.append(chunk)
-            # scrub the benchmark with the SAME scrub as the corpus side:
-            # both sides of the overlap test see identical placeholders, so
-            # contamination spanning emails/URLs still matches (the raw-text
-            # benchmark path could never match a scrubbed corpus gram)
-            bench = decontaminate_benchmark.withColumn(
-                "text", scrub_text(F.col("text"))
-            )
-            flags = contamination_flags(
-                chunk.select("url", "text_scrubbed"),
-                bench,
-                id_col="url",
-                text_col="text_scrubbed",
-                bench_text_col="text",
-                hashed=True,
-            ).withColumnRenamed("doc_id", "url")
-            chunk = chunk.join(flags.select("url", "contaminated"), "url", "left")
-            chunk = chunk.withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"),
-                    F.when(F.col("contaminated"), "contaminated"),
-                ),
-            ).withColumn("keep", F.col("drop_reason").isNull())
-            extra_cols.append("contaminated")
-        if resample_weights:
-            from .quality import resample_u_col, resample_weight_col
-
-            sampled_out = (
-                F.col("keep")
-                & (resample_u_col("url") >= resample_weight_col(resample_weights))
-            )
-            chunk = chunk.withColumn(
-                "drop_reason",
-                F.coalesce(
-                    F.col("drop_reason"), F.when(sampled_out, "resampled_out")
-                ),
-            ).withColumn("keep", F.col("drop_reason").isNull())
-        out = chunk.select(
-            *[c for c in OUTPUT_COLUMNS + extra_cols if c in chunk.columns]
-        )
-        if early is not None:
-            # early-dropped rows carry url/warc_ts/keep/drop_reason; the
-            # scoring columns they never reached are null-filled
-            out = out.unionByName(early, allowMissingColumns=True)
-        if early_clf is not None:
-            out = out.unionByName(early_clf, allowMissingColumns=True)
-        out.write.mode("overwrite").parquet(path)
-        for c in caches:
-            c.unpersist()
-
-        # metrics from the written chunk (exact, cheap — it's already on disk)
-        written = spark.read.parquet(path)
-        agg = written.agg(
-            F.count("*").alias("docs"),
-            F.sum(F.col("keep").cast("int")).alias("kept"),
-            F.sum((F.col("text_scrubbed") != F.lit("")).cast("int")).alias("nonempty"),
-        ).collect()[0]
-        reasons = {
-            r["drop_reason"]: r["c"]
-            for r in written.filter(~F.col("keep"))
-            .groupBy("drop_reason")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        }
-        m = {
-            "chunk": k,
-            "docs": int(agg["docs"]),
-            "kept": int(agg["kept"] or 0),
-            "by_reason": reasons,
-            # snapshot manifest (the Iceberg-manifest analogue): per-file
-            # byte size + footer row count, so a resume/audit can verify the
-            # chunk without a Spark scan and a compactor can plan from it
-            "manifest": _parquet_manifest(path),
-            "versions": {
-                "job": JOB_VERSION,
-                "extractor": EXTRACTOR_VERSION,
-                "rules": RULES_VERSION,
-            },
-            "stages": {
-                "gopher": bool(gopher),
-                "resample_weights": resample_weights,
-                "decontaminate": decontaminate_benchmark is not None,
-                "blocklist": blocklist_domains is not None,
-                "url_dedup": bool(url_dedup),
-                "classifier_prefilter": classifier_prefilter,
-            },
-            "wall_sec": round(time.time() - t_start, 2),
-        }
-        _write_json_atomic(marker, m)
-        _merge(totals, m)
+            m = {
+                "chunk": k,
+                "docs": counts["docs"],
+                "kept": counts["kept"],
+                "by_reason": {r: counts[r] for r in reasons if counts[r]},
+                "scrub_docs_changed": counts["scrub_docs_changed"],
+                # snapshot manifest (the Iceberg-manifest analogue): per-file
+                # byte size + footer row count, so a resume/audit can verify
+                # the chunk without a Spark scan and a compactor can plan
+                # from it
+                "manifest": _parquet_manifest(path),
+                "versions": {
+                    "job": JOB_VERSION,
+                    "extractor": EXTRACTOR_VERSION,
+                    "rules": RULES_VERSION,
+                },
+                "stages": {
+                    "gopher": bool(gopher),
+                    "resample_weights": resample_weights,
+                    "decontaminate": decontaminate_benchmark is not None,
+                    "blocklist": blocklist_domains is not None,
+                    "url_dedup": bool(url_dedup),
+                    "classifier_prefilter": classifier_prefilter,
+                },
+                "wall_sec": round(time.time() - t_start, 2),
+            }
+            _write_json_atomic(marker, m)
+            _merge(totals, m)
+    finally:
+        if scored is not None:
+            scored.unpersist()
 
     totals["wall_sec"] = round(time.time() - t_start, 2)
     _write_json_atomic(os.path.join(output_dir, "_metrics.json"), totals)
     return totals
+
+
+def _prepared(pages: DataFrame, partitions: int) -> DataFrame:
+    """Extract, balance, scrub (flagging pages the scrub changed) and attach
+    the rule features: everything before the fused langid+LM stage."""
+    df = with_extracted_text(pages)
+    df = df.repartition(partitions, F.xxhash64("url"))
+    df = df.withColumn("text_scrubbed", scrub_text(F.col("text")))
+    df = df.withColumn(SCRUB_CHANGED, F.col("text_scrubbed") != F.col("text"))
+    return rule_columns(df, text_col="text_scrubbed")
+
+
+def _early_drops(
+    chunk: DataFrame, blocklist_domains: DataFrame | None, url_dedup: bool
+) -> tuple[DataFrame, DataFrame]:
+    """Split ``chunk`` on the url column alone into its survivors and the
+    blocked-domain / canonical-URL-duplicate rows (url, warc_ts, keep,
+    drop_reason)."""
+    reason = F.lit(None).cast("string")
+    if url_dedup:
+        chunk = chunk.withColumn("_canon_url", canonical_url(F.col("url")))
+        first = chunk.groupBy("_canon_url").agg(
+            F.min(
+                F.struct(F.col("warc_ts").alias("ts"), F.col("url").alias("u"))
+            ).alias("_first")
+        )
+        chunk = chunk.join(first, "_canon_url")
+        reason = F.when(
+            ~(
+                (F.col("warc_ts") == F.col("_first.ts"))
+                & (F.col("url") == F.col("_first.u"))
+            ),
+            F.lit(URL_DUPLICATE),
+        ).otherwise(reason)
+    if blocklist_domains is not None:
+        bl = F.broadcast(
+            blocklist_domains.select(
+                F.lower(F.col("domain")).alias("_bl_domain")
+            ).distinct()
+        )
+        # psl=True: public-suffix-aware matching, so a blocklist entry
+        # 'badsite.co.uk' matches exactly that site and can never block the
+        # whole .co.uk registry (ADVICE r4)
+        chunk = chunk.join(
+            bl,
+            registered_domain(F.col("url"), psl=True) == F.col("_bl_domain"),
+            "left",
+        )
+        # blocklist outranks url_duplicate (a blocked dup reads
+        # 'blocked_domain' — the reason a human acts on)
+        reason = F.when(
+            F.col("_bl_domain").isNotNull(), F.lit(BLOCKED_DOMAIN)
+        ).otherwise(reason)
+    chunk = chunk.withColumn("_early_drop", reason)
+    for c in ("_canon_url", "_first", "_bl_domain"):
+        if c in chunk.columns:
+            chunk = chunk.drop(c)
+    early = chunk.filter(F.col("_early_drop").isNotNull()).select(
+        "url",
+        "warc_ts",
+        F.lit(False).alias("keep"),
+        F.col("_early_drop").alias("drop_reason"),
+    )
+    return chunk.filter(F.col("_early_drop").isNull()).drop("_early_drop"), early
+
+
+def _chunk_rows(
+    source: DataFrame, is_scored: bool, k: int, n_chunks: int,
+    partitions: int, thresholds: dict, bc_langid, bc_models: dict,
+    gopher: bool, resample_weights: dict[str, float] | None,
+    decontaminate_benchmark: DataFrame | None,
+    blocklist_domains: DataFrame | None, url_dedup: bool,
+    classifier_prefilter: float | None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Chunk ``k``'s output rows (plus ``SCRUB_CHANGED``) and the caches to
+    release after its write. ``source`` is the raw pages, or the persisted
+    scored pages when ``is_scored``."""
+    # with url_dedup, chunk on the CANONICAL url's hash so every duplicate
+    # family is confined to one chunk (the per-chunk first-occurrence
+    # groupBy is then globally correct)
+    chunk_key = canonical_url(F.col("url")) if url_dedup else F.col("url")
+    chunk = source.filter(F.pmod(F.xxhash64(chunk_key), F.lit(n_chunks)) == k)
+
+    # ---- EARLY drops on the url column only: on the per-chunk plan blocked
+    # domains and canonical-URL crawl duplicates never enter extraction/
+    # scoring (cheapest-filter-first; at 10^12 docs these are the highest-
+    # volume drops and the extraction+Arrow stages are the cost)
+    early = None
+    if blocklist_domains is not None or url_dedup:
+        chunk, early = _early_drops(chunk, blocklist_domains, url_dedup)
+    if not is_scored:
+        chunk = _prepared(chunk, partitions)
+    caches: list[DataFrame] = []
+    early_clf = None
+    if classifier_prefilter is not None:
+        from .classifier import classifier_score_col
+
+        if not is_scored:
+            # cache the extracted+scrubbed rows: both split branches read
+            # them, and without the cache each branch re-runs extraction
+            chunk = chunk.cache()
+            caches.append(chunk)
+        z = classifier_score_col(F.col("text_scrubbed"))
+        chunk = chunk.withColumn("_clf_z", z)
+        early_clf = chunk.filter(F.col("_clf_z") < classifier_prefilter).select(
+            "url",
+            "warc_ts",
+            "text_scrubbed",
+            SCRUB_CHANGED,
+            F.lit(False).alias("keep"),
+            F.lit(CLASSIFIER_LOW).alias("drop_reason"),
+        )
+        chunk = chunk.filter(F.col("_clf_z") >= classifier_prefilter).drop("_clf_z")
+    if not is_scored:
+        # langid + per-language scoring FUSED into one ArrowEvalPython stage
+        chunk = with_langid_scores(chunk, bc_langid, bc_models)
+    chunk = with_buckets(chunk, thresholds, lang_col="lang_pred", ppl_col="ppl")
+    chunk = decide(chunk)
+    extra_cols: list[str] = []
+    if gopher:
+        from ..ops.gopher import gopher_decide, gopher_features
+
+        chunk = gopher_decide(gopher_features(chunk, text_col="text_scrubbed"))
+        chunk = chunk.withColumn(
+            "drop_reason",
+            F.coalesce(
+                F.col("drop_reason"),
+                F.when(
+                    ~F.col("gopher_keep"),
+                    F.concat(F.lit(GOPHER_PREFIX), F.col("gopher_drop_reason")),
+                ),
+            ),
+        ).withColumn("keep", F.col("drop_reason").isNull())
+        extra_cols.append("gopher_drop_reason")
+    if decontaminate_benchmark is not None:
+        from ..ops.decontam import contamination_flags
+
+        # the flags join is self-referencing: without a cache the chunk's
+        # subtree executes once per join side (ADVICE r3). Drop the heavy
+        # source columns (html etc.) and cache the decision-sized rows so
+        # the chunk plan runs exactly once.
+        needed = set(OUTPUT_COLUMNS + extra_cols + [SCRUB_CHANGED])
+        chunk = chunk.select(*[c for c in chunk.columns if c in needed])
+        chunk = chunk.cache()
+        caches.append(chunk)
+        # scrub the benchmark with the SAME scrub as the corpus side: both
+        # sides of the overlap test see identical placeholders, so
+        # contamination spanning emails/URLs still matches (the raw-text
+        # benchmark path could never match a scrubbed corpus gram)
+        bench = decontaminate_benchmark.withColumn("text", scrub_text(F.col("text")))
+        flags = contamination_flags(
+            chunk.select("url", "text_scrubbed"),
+            bench,
+            id_col="url",
+            text_col="text_scrubbed",
+            bench_text_col="text",
+            hashed=True,
+        ).withColumnRenamed("doc_id", "url")
+        chunk = chunk.join(flags.select("url", "contaminated"), "url", "left")
+        chunk = chunk.withColumn(
+            "drop_reason",
+            F.coalesce(
+                F.col("drop_reason"), F.when(F.col("contaminated"), CONTAMINATED)
+            ),
+        ).withColumn("keep", F.col("drop_reason").isNull())
+        extra_cols.append("contaminated")
+    if resample_weights:
+        from .quality import resample_u_col, resample_weight_col
+
+        sampled_out = F.col("keep") & (
+            resample_u_col("url") >= resample_weight_col(resample_weights)
+        )
+        chunk = chunk.withColumn(
+            "drop_reason",
+            F.coalesce(F.col("drop_reason"), F.when(sampled_out, RESAMPLED_OUT)),
+        ).withColumn("keep", F.col("drop_reason").isNull())
+    out = chunk.select(
+        *[c for c in OUTPUT_COLUMNS + extra_cols + [SCRUB_CHANGED] if c in chunk.columns]
+    )
+    for dropped in (early, early_clf):
+        if dropped is not None:
+            # dropped rows carry url/warc_ts/keep/drop_reason (classifier
+            # drops also text_scrubbed); the scoring columns they never
+            # reached are null-filled
+            out = out.unionByName(dropped, allowMissingColumns=True)
+    return out, caches
 
 
 def _parquet_manifest(chunk_dir: str) -> list[dict]:
@@ -446,8 +548,8 @@ def _write_json_atomic(path: str, obj) -> None:
 
 
 def _merge(totals: dict, m: dict) -> None:
-    totals["docs"] += m.get("docs", 0)
-    totals["kept"] += m.get("kept", 0)
+    for key in ("docs", "kept", "scrub_docs_changed"):
+        totals[key] += m.get(key, 0)
     for k, v in (m.get("by_reason") or {}).items():
         totals["by_reason"][k] = totals["by_reason"].get(k, 0) + v
 

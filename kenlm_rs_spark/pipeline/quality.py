@@ -8,6 +8,8 @@ lineage (FIXTURES.md §4 expected-output schema).
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,26 +38,34 @@ def bucket_col(ppl: Column, head: Column, tail: Column) -> Column:
     )
 
 
+# the CCNet rule chain, (drop_reason, column, op, limit) in rule order: the
+# first failing rule names the drop. "lang_conf" and "bucket" stand for
+# decide's lang_conf_col and bucket arguments.
+DECIDE_RULES = (
+    ("too_short", "n_tokens", operator.lt, MIN_TOKENS),
+    ("symbol_ratio", "symbol_ratio", operator.gt, MAX_SYMBOL_RATIO),
+    ("digit_ratio", "digit_ratio", operator.gt, MAX_DIGIT_RATIO),
+    ("repetition", "dup3_frac", operator.gt, MAX_DUP3_FRAC),
+    ("lang_confidence", "lang_conf", operator.lt, MIN_LANG_CONF),
+    ("ppl_tail", "bucket", operator.eq, "tail"),
+)
+
+
 def decide(
     df: DataFrame,
     ppl_col: str = "ppl",
     bucket: str = "bucket",
     lang_conf_col: str | None = "lang_conf",
 ) -> DataFrame:
-    """Attach keep boolean + drop_reason (first failing rule, fixed order)."""
-    reasons = [
-        (F.col("n_tokens") < MIN_TOKENS, "too_short"),
-        (F.col("symbol_ratio") > MAX_SYMBOL_RATIO, "symbol_ratio"),
-        (F.col("digit_ratio") > MAX_DIGIT_RATIO, "digit_ratio"),
-        (F.col("dup3_frac") > MAX_DUP3_FRAC, "repetition"),
-    ]
-    if lang_conf_col is not None and lang_conf_col in df.columns:
-        reasons.append((F.col(lang_conf_col) < MIN_LANG_CONF, "lang_confidence"))
-    reasons.append((F.col(bucket) == "tail", "ppl_tail"))
-
+    """Attach keep boolean + drop_reason (first failing rule, fixed order).
+    The lang_confidence rule applies only when ``lang_conf_col`` names a
+    column of ``df``."""
+    cols = {"lang_conf": lang_conf_col, "bucket": bucket}
     reason = F.lit(None).cast("string")
-    for cond, name in reversed(reasons):
-        reason = F.when(cond, name).otherwise(reason)
+    for name, col, op, limit in reversed(DECIDE_RULES):
+        if col == "lang_conf" and lang_conf_col not in df.columns:
+            continue
+        reason = F.when(op(F.col(cols.get(col, col)), limit), name).otherwise(reason)
     return df.withColumn("drop_reason", reason).withColumn(
         "keep", F.col("drop_reason").isNull()
     )
@@ -144,14 +154,14 @@ def with_buckets(
     df: DataFrame, thresholds: dict[str, tuple[float, float]],
     lang_col: str = "lang_pred", ppl_col: str = "ppl",
 ) -> DataFrame:
-    """Join the (tiny, broadcast) threshold map and derive the bucket."""
-    spark = df.sparkSession
-    rows = [(k, float(v[0]), float(v[1])) for k, v in thresholds.items()]
-    tdf = spark.createDataFrame(rows, f"{lang_col} string, t_head double, t_tail double")
-    joined = df.join(F.broadcast(tdf), lang_col, "left")
-    return joined.withColumn(
-        "bucket",
-        F.when(F.col("t_head").isNull(), "middle").otherwise(
-            bucket_col(F.col(ppl_col), F.col("t_head"), F.col("t_tail"))
-        ),
-    ).drop("t_head", "t_tail")
+    """Derive the bucket from one literal CASE on ``lang_col`` over the
+    threshold map: head when ``ppl <= t_head``, tail when ``ppl >= t_tail``,
+    else middle. A language with no thresholds, or a NULL language, is
+    middle. A projection, not a join: no threshold table, no job."""
+    ppl, lang = F.col(ppl_col), F.col(lang_col)
+    bucket = F.lit("middle")
+    for name, (head, tail) in sorted(thresholds.items(), reverse=True):
+        bucket = F.when(
+            lang == name, bucket_col(ppl, F.lit(float(head)), F.lit(float(tail)))
+        ).otherwise(bucket)
+    return df.withColumn("bucket", bucket)

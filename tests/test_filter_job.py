@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -23,10 +25,48 @@ def pages(spark):
     return generate_pages_df(spark, N_DOCS).cache()
 
 
+def _chunk_rows(out, k):
+    from kenlm_rs_spark.pipeline.filter_job import OUTPUT_COLUMNS
+
+    rows = pq.read_table(os.path.join(out, f"chunk={k}"), columns=OUTPUT_COLUMNS).to_pylist()
+    return Counter(tuple(r[c] for c in OUTPUT_COLUMNS) for r in rows)
+
+
 def _run(spark, pages, out):
     from kenlm_rs_spark.pipeline.filter_job import run_filter_job
 
     return run_filter_job(spark, pages, out, LM_DIR, n_chunks=CHUNKS)
+
+
+def _with_dups_and_spam(spark, pages):
+    """``pages`` plus a re-crawl of every row_id%10==0 page (tracking-param
+    + fragment variants of the same canonical URL, one day later) and 5
+    pages of the domain spamdomain.net."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    dups = (
+        pages.filter(F.col("row_id") % 10 == 0)
+        .withColumn("url", F.concat("url", F.lit("?utm_source=feed#frag")))
+        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
+        .withColumn("row_id", F.col("row_id") + 1_000_000)
+    )
+    spam = spark.createDataFrame(
+        [
+            (
+                f"https://bad.spamdomain.net/p{i}",
+                dt.datetime(2025, 3, 1, 0, 0, i),
+                b"<html><body><p>spam spam</p></body></html>",
+                "spam text entirely here " * 10,
+                "en",
+                2_000_000 + i,
+            )
+            for i in range(5)
+        ],
+        pages.schema,
+    )
+    return pages.unionByName(dups).unionByName(spam)
 
 
 def test_filter_job_totals_and_lineage(spark, pages, tmp_path):
@@ -43,6 +83,23 @@ def test_filter_job_totals_and_lineage(spark, pages, tmp_path):
         assert n_written == m["docs"]
     assert os.path.exists(os.path.join(out, "_thresholds.json"))
     assert os.path.exists(os.path.join(out, "_metrics.json"))
+    # scrub hits: pages whose extracted text the scrub changed, counted in
+    # Python over the written rows against the extracted input text
+    from kenlm_rs_spark.pipeline.extract import with_extracted_text
+
+    text = {r["url"]: r["text"] for r in with_extracted_text(pages).select("url", "text").collect()}
+    written = pq.read_table(out, columns=["url", "text_scrubbed"]).to_pylist()
+    changed = sum(
+        r["text_scrubbed"] is not None and text[r["url"]] is not None
+        and r["text_scrubbed"] != text[r["url"]]
+        for r in written
+    )
+    assert changed > 0
+    assert t["scrub_docs_changed"] == changed
+    assert sum(
+        json.load(open(os.path.join(out, f"_chunk_{k}.json")))["scrub_docs_changed"]
+        for k in range(CHUNKS)
+    ) == changed
 
 
 def test_filter_job_default_thresholds_are_scale_safe(spark, tmp_path):
@@ -100,7 +157,11 @@ def test_filter_job_resume_skips_and_verifies(spark, pages, tmp_path):
         assert os.path.getmtime(os.path.join(out, f"chunk={k}", "_SUCCESS")) == mtimes[k]
 
     # simulated crash: marker exists but its count does not match the
-    # written parquet -> that chunk must be recomputed, not trusted
+    # written parquet -> that chunk must be recomputed, not trusted. The
+    # recompute reads the thresholds from _thresholds.json, so it scores
+    # chunk 1 in its own plan: its rows must equal the first run's, which
+    # were cut from the persisted scored pages
+    rows_1 = _chunk_rows(out, 1)
     marker = os.path.join(out, "_chunk_1.json")
     m = json.load(open(marker))
     bad = dict(m)
@@ -111,9 +172,12 @@ def test_filter_job_resume_skips_and_verifies(spark, pages, tmp_path):
     assert (t3["docs"], t3["kept"], t3["by_reason"]) == (
         t1["docs"], t1["kept"], t1["by_reason"]
     )
+    assert t3["scrub_docs_changed"] == t1["scrub_docs_changed"]
     # the marker was rewritten with the true counts
     m2 = json.load(open(marker))
     assert m2["docs"] == m["docs"] and m2["kept"] == m["kept"]
+    assert m2["by_reason"] == m["by_reason"]
+    assert _chunk_rows(out, 1) == rows_1
 
 
 def test_bucket_resample_deterministic_and_calibrated(spark, pages):
@@ -233,37 +297,13 @@ def test_filter_job_url_dedup_and_blocklist(spark, pages, tmp_path):
     co-locate) and broadcast domain blocklisting — both applied on the url
     column BEFORE extraction/scoring, so dropped rows carry null scoring
     columns in the output."""
-    import datetime as dt
-
     from pyspark.sql import functions as F
 
     from kenlm_rs_spark.pipeline.filter_job import run_filter_job
 
-    # re-crawls of every row_id%10==0 page: tracking-param + fragment
-    # variants of the same canonical URL, one day later
-    dups = (
-        pages.filter(F.col("row_id") % 10 == 0)
-        .withColumn("url", F.concat("url", F.lit("?utm_source=feed#frag")))
-        .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
-        .withColumn("row_id", F.col("row_id") + 1_000_000)
-    )
-    n_dups = dups.count()
-    assert n_dups == N_DOCS // 10
-    spam = spark.createDataFrame(
-        [
-            (
-                f"https://bad.spamdomain.net/p{i}",
-                dt.datetime(2025, 3, 1, 0, 0, i),
-                b"<html><body><p>spam spam</p></body></html>",
-                "spam text entirely here " * 10,
-                "en",
-                2_000_000 + i,
-            )
-            for i in range(5)
-        ],
-        pages.schema,
-    )
-    all_pages = pages.unionByName(dups).unionByName(spam)
+    all_pages = _with_dups_and_spam(spark, pages)
+    n_dups = N_DOCS // 10
+    assert all_pages.count() == N_DOCS + n_dups + 5
     bl = spark.createDataFrame([("SpamDomain.NET",)], "domain string")
 
     out = str(tmp_path / "out_urls")
@@ -340,8 +380,6 @@ def test_job_rows_equal_filter_transform(spark, tmp_path):
     """The job's chunk body and the stream's filter_transform build the
     decision from the same projection: with the job's frozen thresholds,
     filter_transform over the same pages yields the job's rows exactly."""
-    from collections import Counter
-
     from kenlm_rs_spark.pipeline.corpus import generate_pages_df
     from kenlm_rs_spark.pipeline.filter_job import (
         OUTPUT_COLUMNS,
@@ -374,3 +412,200 @@ def test_job_rows_equal_filter_transform(spark, tmp_path):
     assert stream == job
     keep = OUTPUT_COLUMNS.index("keep")
     assert {r[keep] for r in job} == {True, False}
+
+
+def test_filter_job_scores_each_page_once(spark, tmp_path):
+    """Every page passes through extraction and scoring once: an identity
+    UDF on the input text counts its evaluations. The threshold pass reads
+    every page here (fraction 1.0), and the chunks reuse its scored rows
+    instead of extracting and scoring each page a second time."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    from kenlm_rs_spark.pipeline.corpus import generate_pages_df
+    from kenlm_rs_spark.pipeline.filter_job import run_filter_job
+
+    evals = spark.sparkContext.accumulator(0)
+
+    def seen(text):
+        evals.add(1)
+        return text
+
+    n = 200
+    pages = generate_pages_df(spark, n).withColumn(
+        "text", F.udf(seen, StringType())("text")
+    )
+    totals = run_filter_job(spark, pages, str(tmp_path / "out"), LM_DIR, n_chunks=2)
+    assert totals["docs"] == n
+    assert evals.value == n
+
+
+def test_filter_job_jobs_do_not_grow_per_chunk(spark, pages, tmp_path):
+    """Each chunk costs one Spark job, its parquet write: the marker's
+    counts are observed on the write, not read back."""
+    from kenlm_rs_spark.pipeline.filter_job import run_filter_job
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n_chunks in (2, 4):
+        group = f"filter-job-chunks-{n_chunks}"
+        sc.setJobGroup(group, group)
+        try:
+            run_filter_job(spark, pages, str(tmp_path / str(n_chunks)), LM_DIR, n_chunks=n_chunks)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n_chunks] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] - jobs[2] <= 2, jobs
+
+
+def test_markers_equal_written_chunks(spark, pages, tmp_path):
+    """With every opt-in stage on, each marker's docs, kept and by_reason
+    equal a pyarrow read-back of its chunk, and every drop-reason family
+    these stages produce (CCNet rules, gopher, resampling, blocklist, URL
+    dedup, classifier) is observed."""
+    from kenlm_rs_spark.pipeline.filter_job import run_filter_job
+
+    bl = spark.createDataFrame([("SpamDomain.NET",)], "domain string")
+    out = str(tmp_path / "out")
+    totals = run_filter_job(
+        spark, _with_dups_and_spam(spark, pages), out, LM_DIR, n_chunks=2,
+        gopher=True,
+        resample_weights={"head": 0.9, "middle": 0.6, "tail": 0.3},
+        blocklist_domains=bl, url_dedup=True, classifier_prefilter=-1.0,
+    )
+    reasons = Counter()
+    for k in range(2):
+        m = json.load(open(os.path.join(out, f"_chunk_{k}.json")))
+        rows = pq.read_table(os.path.join(out, f"chunk={k}"), columns=["keep", "drop_reason"]).to_pylist()
+        dropped = Counter(r["drop_reason"] for r in rows if not r["keep"])
+        assert m["docs"] == len(rows)
+        assert m["kept"] == sum(r["keep"] for r in rows)
+        assert m["by_reason"] == dict(dropped)
+        reasons += dropped
+    assert totals["by_reason"] == dict(reasons)
+    assert {"too_short", "ppl_tail", "resampled_out", "blocked_domain", "url_duplicate",
+            "classifier_low"} <= set(reasons), reasons
+    assert any(r.startswith("gopher:") for r in reasons), reasons
+
+
+def _write_plans(spark, run):
+    """Call ``run()`` and return the physical plans (simple explain mode) of
+    the parquet writes it executed, from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    saved = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    try:
+        run()
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", saved)
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+
+
+def _ancestors(lines, i):
+    """Plan-tree lines above line ``i`` on its path to the root."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-*()0123456789"))
+
+    out, d = [], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            out.append(line)
+            d = depth(line)
+    return out
+
+
+def _node(line):
+    return line.lstrip(" :+-*()0123456789")
+
+
+@pytest.mark.parametrize("fraction", [1.0, 0.5])
+def test_chunk_write_plans(spark, pages, tmp_path, fraction):
+    """In every chunk write (url_dedup on, so the chunk plan shuffles) the
+    observation's CollectMetrics sits above every Exchange: Spark then
+    applies each task's metrics once, also when a shuffle stage is retried.
+    The chunk filter sits below the Arrow scoring stage on the sampled path
+    (each chunk scores its own pages) and above it when the chunks are cut
+    from the persisted scored pages."""
+    from kenlm_rs_spark.pipeline.filter_job import run_filter_job
+
+    plans = _write_plans(spark, lambda: run_filter_job(
+        spark, _with_dups_and_spam(spark, pages), str(tmp_path / "out"), LM_DIR,
+        n_chunks=2, sample_for_thresholds=fraction, url_dedup=True,
+    ))
+    assert len(plans) == 2
+    for plan in plans:
+        lines = plan.split("== Physical Plan ==")[1].strip("\n").split("\n")
+        exchanges = [i for i, line in enumerate(lines) if _node(line).startswith("Exchange")]
+        assert exchanges and any(_node(line).startswith("CollectMetrics") for line in lines)
+        for i in exchanges:
+            assert any(_node(a).startswith("CollectMetrics") for a in _ancestors(lines, i))
+        # the scored rows' chunk filter; the early-dropped rows' branch
+        # filters the raw pages and is never scored
+        below_arrow = [
+            any(_node(a).startswith("ArrowEvalPython") for a in _ancestors(lines, i))
+            for i, line in enumerate(lines)
+            if _node(line).startswith("Filter") and "pmod(xxhash64(" in line
+        ]
+        assert below_arrow
+        assert any(below_arrow) == (fraction < 1.0)
+
+
+def test_with_buckets_case_equals_join(spark):
+    """The literal CASE gives the broadcast-join form's buckets row for row
+    (NULL language, a language without thresholds, ppl of inf/NaN/NULL and
+    on each threshold) and plans no join."""
+    from pyspark.sql import functions as F
+
+    from kenlm_rs_spark.pipeline.quality import bucket_col, with_buckets
+
+    def by_join(df, thresholds):
+        rows = [(k, float(v[0]), float(v[1])) for k, v in thresholds.items()]
+        tdf = spark.createDataFrame(rows, "lang_pred string, t_head double, t_tail double")
+        return df.join(F.broadcast(tdf), "lang_pred", "left").withColumn(
+            "bucket",
+            F.when(F.col("t_head").isNull(), "middle").otherwise(
+                bucket_col(F.col("ppl"), F.col("t_head"), F.col("t_tail"))
+            ),
+        )
+
+    inf, nan = float("inf"), float("nan")
+    ppls = [None, -inf, 0.0, 10.0, 15.0, 20.0, 25.0, inf, nan]
+    langs = [None, "en", "de", "zz", "inf"]
+    df = spark.createDataFrame(
+        [(i, lang, ppl) for i, (lang, ppl) in enumerate((l, p) for l in langs for p in ppls)],
+        "id int, lang_pred string, ppl double",
+    )
+    for thresholds in (
+        {"en": (10.0, 20.0), "de": (15.0, 15.0), "inf": (inf, inf)},
+        {"en": (nan, 20.0)},
+        {},
+    ):
+        new = with_buckets(df, thresholds)
+        assert "Join" not in new._jdf.queryExecution().executedPlan().toString()
+        got = sorted(tuple(r) for r in new.select("id", "bucket").collect())
+        want = sorted(tuple(r) for r in by_join(df, thresholds).select("id", "bucket").collect())
+        assert got == want, thresholds
+
+
+def test_sampled_thresholds_are_reproducible(spark, pages, tmp_path):
+    """The sampled threshold pass draws the same seeded sample on every
+    run, so two runs freeze the same thresholds."""
+    from kenlm_rs_spark.pipeline.filter_job import run_filter_job
+
+    thresholds = []
+    for run in range(2):
+        out = tmp_path / str(run)
+        run_filter_job(spark, pages, str(out), LM_DIR, n_chunks=1, sample_for_thresholds=0.5)
+        thresholds.append(json.load(open(out / "_thresholds.json")))
+    assert thresholds[0] == thresholds[1]
